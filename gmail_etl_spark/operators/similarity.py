@@ -271,6 +271,44 @@ def hyperplane_lsh_pairs(
     )
 
 
+def _batch_topk(ids, sims, q_ids, k: int, cand=None):
+    """Per-batch partial top-k of every query at once.
+
+    ``sims`` is the (batch, n_queries) similarity matrix of corpus rows
+    ``ids`` against queries ``q_ids``; ``cand`` optionally restricts each
+    query to a (n_queries, batch) boolean candidate mask.  A query never
+    matches its own id.  Each query keeps its first ``k`` candidates in
+    the final ranking's total order, (round(sim, 6) desc, id asc) with
+    NaN last, so merging the partials of every batch is lossless.
+
+    One ``np.partition`` finds each query's k-th rounded similarity; only
+    the rows at or above it (ties included) go through the ``lexsort``.
+    Excluded rows and NaN sort as -inf in that key.  Returns
+    ``(query_index, row_index, sim)`` arrays, query-major, with ``sim``
+    the unrounded value from ``sims``.
+    """
+    import numpy as np
+
+    # one rounded, C-contiguous transpose: each query's key is a row
+    key = np.round(sims.T, 6, out=np.empty(sims.shape[::-1]))
+    key[np.isnan(key)] = -np.inf
+    valid = ids[None, :] != q_ids[:, None]
+    if cand is not None:
+        valid &= cand
+    key[~valid] = -np.inf
+    n = key.shape[1]
+    if 0 < k < n:
+        kth = np.partition(key, n - k, axis=1)[:, n - k]
+        valid &= key >= kth[:, None]
+    qi, ri = np.nonzero(valid)
+    order = np.lexsort((ids[ri], -key[qi, ri], qi))
+    qi, ri = qi[order], ri[order]
+    rank = np.arange(qi.size) - np.searchsorted(qi, qi)
+    keep = rank < k
+    qi, ri = qi[keep], ri[keep]
+    return qi, ri, sims[ri, qi]
+
+
 def cosine_topk_vectorized(
     queries: DataFrame,
     corpus: DataFrame,
@@ -286,7 +324,13 @@ def cosine_topk_vectorized(
     numpy matmul (batch × dim @ dim × n_queries), and only the per-batch
     top-k rows per query — ordered by (sim desc, id asc), the same total
     order as the final ranking, so the global top-k survives partial
-    selection — leave the executor.  A final window merges partials:
+    selection — leave the executor.  The selection is batched over all
+    queries (:func:`_batch_topk`): one transpose and one rounding of the
+    similarity matrix, one ``np.partition`` for every query's k-th
+    rounded similarity, and one ``lexsort`` over only the rows at or
+    above it, ties included — not a full sort of the batch per query
+    (64 queries, 25k-row batch, k=10, one Xeon thread: 0.24 → 0.062 s,
+    identical rows).  A final window merges partials:
     shuffle volume is O(n_batches · k · n_queries), independent of
     corpus size.  ~50-100× the array-expression path at wide dims: one
     BLAS call replaces per-row ``zip_with``/``aggregate`` trees.
@@ -322,7 +366,6 @@ def cosine_topk_vectorized(
             F.lit(0.0).alias("sim"),
             F.lit(1).alias("rank"),
         ).limit(0)
-    q_ids = np.array([r["query_id"] for r in q_rows])
     q_mat = np.array([r["q_vec"] for r in q_rows], dtype=np.float64)
     # zero-norm queries get sim 0 everywhere (id-ordered top-k), the
     # same convention as the corpus-side guard below — not NaN rankings
@@ -330,33 +373,42 @@ def cosine_topk_vectorized(
     np.divide(q_mat, q_norms, out=q_mat, where=q_norms > 0)
 
     # id types follow the input schemas (the pq_topk discipline): a
-    # string-keyed corpus must not crash a generic signature.
-    # to_arrow_type lives in a private PySpark module whose location has
-    # moved across releases (ADVICE r12) — fall back to an explicit map
-    # of the id types this operator supports rather than crash on a
-    # version bump.
-    q_id_type = queries.schema[id_col].dataType.simpleString()
+    # string-keyed corpus must not crash a generic signature.  Neighbor
+    # ids are taken straight from each batch's own id column, so their
+    # Arrow type is the batch schema's.  The query id type comes from
+    # to_arrow_type, which lives in a private PySpark module whose
+    # location has moved across releases (ADVICE r12) — fall back to an
+    # explicit map of the id types this operator supports rather than
+    # crash on a version bump.
+    q_id_dt = queries.schema[id_col].dataType
+    q_id_type = q_id_dt.simpleString()
     c_id_type = corpus.schema[id_col].dataType.simpleString()
     try:
         from pyspark.sql.pandas.types import to_arrow_type
 
-        q_id_pa = to_arrow_type(queries.schema[id_col].dataType)
-        c_id_pa = to_arrow_type(corpus.schema[id_col].dataType)
-    except ImportError:  # pragma: no cover - exercised on other Spark versions
+        q_id_pa = to_arrow_type(q_id_dt)
+    except ImportError:
+        from pyspark.sql.types import DecimalType
+
         _PA_BY_SIMPLE = {
             "tinyint": pa.int8(), "smallint": pa.int16(), "int": pa.int32(),
             "bigint": pa.int64(), "float": pa.float32(), "double": pa.float64(),
             "string": pa.string(), "binary": pa.binary(), "boolean": pa.bool_(),
+            "date": pa.date32(), "timestamp": pa.timestamp("us", tz="UTC"),
+            "timestamp_ntz": pa.timestamp("us"),
         }
-        try:
+        if isinstance(q_id_dt, DecimalType):
+            q_id_pa = pa.decimal128(q_id_dt.precision, q_id_dt.scale)
+        elif q_id_type in _PA_BY_SIMPLE:
             q_id_pa = _PA_BY_SIMPLE[q_id_type]
-            c_id_pa = _PA_BY_SIMPLE[c_id_type]
-        except KeyError as exc:
+        else:
             raise TypeError(
                 f"cosine_topk_vectorized: unsupported id column type "
-                f"{exc} (supported without pyspark's to_arrow_type: "
-                f"{sorted(_PA_BY_SIMPLE)})"
+                f"{q_id_type!r} (supported without pyspark's to_arrow_type: "
+                f"decimal and {sorted(_PA_BY_SIMPLE)})"
             ) from None
+    q_id_arr = pa.array([r["query_id"] for r in q_rows], type=q_id_pa)
+    q_ids = q_id_arr.to_numpy(zero_copy_only=False)
 
     def _kernel(batches):
         for b in batches:
@@ -395,26 +447,9 @@ def cosine_topk_vectorized(
             norms = np.linalg.norm(c, axis=1, keepdims=True)
             np.divide(c, norms, out=c, where=norms > 0)
             sims = c @ q_mat.T  # (batch, n_queries)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                mask = ids != qid
-                cand_ids, cand_sims = ids[mask], col[mask]
-                if len(cand_ids) > k:
-                    # total order (rounded sim desc, id asc) — matches the
-                    # final window's rank, so partial top-k is lossless
-                    order = np.lexsort((cand_ids, -np.round(cand_sims, 6)))[:k]
-                else:
-                    order = np.arange(len(cand_ids))
-                out_q.extend([qid] * len(order))
-                out_n.extend(cand_ids[order])
-                out_s.extend(cand_sims[order])
+            qi, ri, sim = _batch_topk(ids, sims, q_ids, k)
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_q, type=q_id_pa),
-                    pa.array(out_n, type=c_id_pa),
-                    pa.array(np.asarray(out_s, dtype=np.float64), type=pa.float64()),
-                ],
+                [q_id_arr.take(qi), b.column(0).take(ri), pa.array(sim)],
                 names=["query_id", "neighbor_id", "sim"],
             )
 
@@ -1462,37 +1497,30 @@ def query_ivf_index(
         q_mat = np.array([per_q[q][0] for q in q_ids], dtype=np.float64)
         q_norms = np.linalg.norm(q_mat, axis=1, keepdims=True)
         np.divide(q_mat, q_norms, out=q_mat, where=q_norms > 0)
-        q_cells = [
-            np.fromiter(per_q[q][1], dtype=np.int64) for q in q_ids
-        ]
+        q_ids = np.array(q_ids)
+        # same candidate set as the join path: rows in a query's probed
+        # cells.  ``vectors`` holds only probe_set cells, so a row's
+        # cluster indexes a column of this (query, probed cell) matrix.
+        probe_cells = np.array(probe_set, dtype=np.int64)
+        probed = np.zeros((len(q_ids), len(probe_cells)), dtype=bool)
+        for j, (_, q_cells) in enumerate(per_q.values()):
+            probed[j, np.searchsorted(probe_cells, list(q_cells))] = True
 
         def _kern(batches):
             for pdf in batches:
                 if pdf.empty:
                     continue
                 ids = pdf["__nid"].to_numpy()
-                clusters = pdf["cluster"].to_numpy()
+                cand = probed[
+                    :, np.searchsorted(probe_cells, pdf["cluster"].to_numpy())
+                ]
                 c = np.array(pdf["__cvec"].tolist(), dtype=np.float64)
                 norms = np.linalg.norm(c, axis=1, keepdims=True)
                 np.divide(c, norms, out=c, where=norms > 0)
                 sims = c @ q_mat.T  # (batch, n_queries)
-                out_q, out_n, out_s = [], [], []
-                for j, qid in enumerate(q_ids):
-                    # same candidate set as the join path: rows in this
-                    # query's probed cells, minus the query itself
-                    mask = np.isin(clusters, q_cells[j]) & (ids != qid)
-                    cand_ids, cand_sims = ids[mask], sims[mask, j]
-                    if len(cand_ids) > k:
-                        order = np.lexsort(
-                            (cand_ids, -np.round(cand_sims, 6))
-                        )[:k]
-                    else:
-                        order = np.arange(len(cand_ids))
-                    out_q.extend([qid] * len(order))
-                    out_n.extend(cand_ids[order])
-                    out_s.extend(cand_sims[order])
+                qi, ri, sim = _batch_topk(ids, sims, q_ids, k, cand)
                 yield pd.DataFrame(
-                    {"query_id": out_q, "neighbor_id": out_n, "sim": out_s}
+                    {"query_id": q_ids[qi], "neighbor_id": ids[ri], "sim": sim}
                 )
 
         partials = vectors.select(

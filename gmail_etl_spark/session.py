@@ -35,6 +35,15 @@ ENGINE_CONF: dict[str, str] = {
     # Arrow batch size bounds pandas-UDF memory per slot; 10k rows of
     # wide text columns stays well under executor headroom.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # Every Python task calls importlib.invalidate_caches(), and on
+    # CPython 3.12 and earlier each zipimporter then re-reads its whole
+    # archive; 3.13+ reloads lazily.  Measured in a worker (CPython 3.11,
+    # 4 vCPUs): 16 re-reads of pyspark.zip's 1,328 entries, one per
+    # zipimporter, 0.13-0.42 s per task; with this daemon, which re-reads
+    # an archive only when its mtime or size changed (worker_daemon.py),
+    # none and under 1 ms.  Workers import gmail_etl_spark anyway: the
+    # pandas UDFs are pickled by reference.
+    "spark.python.daemon.module": "gmail_etl_spark.worker_daemon",
     # --- shuffle sizing --------------------------------------------------
     # 32 matches local[32]; AQE coalesces down for small inputs and a
     # cluster deployment raises it to ~2-3x total cores.  At 100 TB the

@@ -523,15 +523,167 @@ def test_vectorized_knn_rejects_null_and_ragged_vectors(spark):
     ).coalesce(1)
     with pytest.raises(PythonException, match="null"):
         cosine_topk_vectorized(queries, null_vec, k=2).collect()
-    # ragged: rows of dim 2 and dim 4 in one batch, 3 rows x total 8
-    # elements does NOT divide — and 2+2+4 with 4 rows of dim 2 would;
-    # use the divisible case to pin the offsets check specifically
+    # ragged: dims [2, 2, 4, 4] in one batch.  The 12 elements divide
+    # into 4 rows of 3, so the reshape alone would succeed with every
+    # row misaligned — only the offsets guard can raise here
     ragged = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0, 0.5, 0.5]), (3, [1.0, 1.0])],
+        [
+            (1, [1.0, 0.0]),
+            (2, [0.0, 1.0]),
+            (3, [0.0, 1.0, 0.5, 0.5]),
+            (4, [1.0, 1.0, 0.0, 0.0]),
+        ],
         "vec_id long, embedding array<double>",
     ).coalesce(1)
     with pytest.raises(PythonException, match="ragged"):
         cosine_topk_vectorized(queries, ragged, k=2).collect()
+
+
+def _per_query_topk(ids, sims, q_ids, k, cand=None):
+    """The per-query selection loop the kNN kernels ran before the
+    batched one: a full lexsort of every query's candidates."""
+    import numpy as np
+
+    rows = []
+    for j, qid in enumerate(q_ids):
+        mask = ids != qid
+        if cand is not None:
+            mask &= cand[j]
+        cand_ids, cand_sims = ids[mask], sims[mask, j]
+        if len(cand_ids) > k:
+            order = np.lexsort((cand_ids, -np.round(cand_sims, 6)))[:k]
+        else:
+            order = np.arange(len(cand_ids))
+        rows += [(qid, cand_ids[i], cand_sims[i]) for i in order]
+    return rows
+
+
+def _unit_sims(corpus, queries):
+    """The kernels' similarity matrix: normalize (zero rows stay zero),
+    then one matmul."""
+    import numpy as np
+
+    c = np.array(corpus, dtype=np.float64)
+    q = np.array(queries, dtype=np.float64)
+    for m in (c, q):
+        n = np.linalg.norm(m, axis=1, keepdims=True)
+        np.divide(m, n, out=m, where=n > 0)
+    return c @ q.T
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["ties_at_kth", "self_nearest", "batch_le_k", "mask_lt_k", "zero_vector", "nan_vector"],
+)
+def test_batch_topk_matches_per_query_sort(case):
+    """The batched partition selection keeps exactly the partial rows of
+    the per-query full sort (as multisets, sims bit-identical)."""
+    import numpy as np
+
+    from gmail_etl_spark.operators.similarity import _batch_topk
+
+    nan = float("nan")
+    q_vecs = [[1.0, 0.0], [0.0, 1.0], [1.0, 1.0]]
+    q_ids = np.array([3, 100, 5])
+    corpus = [[1.0, 0.0], [2.0, 0.0], [0.5, 0.0], [0.0, 1.0], [1.0, 1.0],
+              [0.0, 3.0], [1.0, 0.0], [-1.0, 0.0], [1.0, 2.0]]
+    cand = None
+    k = 3
+    if case == "ties_at_kth":
+        # rows 0, 1, 2 and 6 all have sim 1.0 with query 3: k=2 cuts
+        # through the tie, so only ids break it
+        k = 2
+    elif case == "self_nearest":
+        corpus[3] = [1.0, 0.0]  # id 3 (= query 3) is its own best match
+    elif case == "batch_le_k":
+        corpus, k = [[1.0, 0.0], [nan, 0.0], [0.0, 1.0]], 3
+    elif case == "mask_lt_k":
+        cand = np.zeros((len(q_ids), len(corpus)), dtype=bool)
+        cand[:, [1, 4]] = True
+        cand[2, 7] = True
+    elif case == "zero_vector":
+        corpus[2] = [0.0, 0.0]
+        q_vecs[1] = [0.0, 0.0]  # sims 0 everywhere: ids decide
+    elif case == "nan_vector":
+        corpus[4] = [nan, 1.0]
+        corpus[5] = [nan, nan]
+        cand = np.ones((len(q_ids), len(corpus)), dtype=bool)
+        cand[0, [0, 1, 2, 6, 7]] = False  # query 3: 2 finite + 2 NaN left
+    ids = np.arange(len(corpus))
+    sims = _unit_sims(corpus, q_vecs)
+    qi, ri, sim = _batch_topk(ids, sims, q_ids, k, cand)
+
+    def canon(rows):
+        return sorted((int(q), int(n), np.float64(s).tobytes()) for q, n, s in rows)
+
+    got = canon(zip(q_ids[qi], ids[ri], sim))
+    want = canon(_per_query_topk(ids, sims, q_ids, k, cand))
+    assert got == want
+    # query-major and within a query in the final (sim desc, id asc) order
+    keys = [(q, -np.round(s, 6) if s == s else np.inf, n) for q, n, s in zip(qi, ids[ri], sim)]
+    assert keys == sorted(keys)
+
+
+def test_batch_topk_matches_per_query_sort_randomized():
+    """Coarse integer vectors make rounded-sim ties common; random masks,
+    duplicate ids, NaN rows and every k from 1 to past the batch size."""
+    import numpy as np
+
+    from gmail_etl_spark.operators.similarity import _batch_topk
+
+    rng = np.random.default_rng(7)
+    for _ in range(300):
+        n, nq, k = int(rng.integers(1, 25)), int(rng.integers(1, 5)), int(rng.integers(1, 8))
+        corpus = rng.integers(-2, 3, size=(n, 3)).astype(float)
+        if rng.random() < 0.3:
+            corpus[rng.integers(n)] = np.nan
+        ids = rng.integers(0, 12, n)
+        q_ids = rng.integers(0, 12, nq)
+        cand = rng.random((nq, n)) < 0.6 if rng.random() < 0.5 else None
+        sims = _unit_sims(corpus, rng.integers(-2, 3, size=(nq, 3)))
+        qi, ri, sim = _batch_topk(ids, sims, q_ids, k, cand)
+        got = sorted((q_ids[a], ids[b], np.float64(s).tobytes()) for a, b, s in zip(qi, ri, sim))
+        want = sorted(
+            (q, n, np.float64(s).tobytes()) for q, n, s in _per_query_topk(ids, sims, q_ids, k, cand)
+        )
+        assert got == want
+
+
+@pytest.mark.parametrize("id_type", ["date", "decimal(12,2)"])
+def test_vectorized_knn_without_to_arrow_type(spark, monkeypatch, id_type):
+    """With pyspark's private ``to_arrow_type`` not importable, the
+    fallback type map still serves date- and decimal-keyed corpora,
+    matching the JVM path's ranking."""
+    import sys
+    import types
+
+    from gmail_etl_spark.operators.similarity import cosine_topk, cosine_topk_vectorized
+
+    # a stand-in module without the name: pyspark's own functions keep
+    # their real globals, only a fresh ``from ... import`` fails
+    real = sys.modules["pyspark.sql.pandas.types"]
+    moved = types.ModuleType(real.__name__)
+    moved.__dict__.update({k: v for k, v in vars(real).items() if k != "to_arrow_type"})
+    monkeypatch.setitem(sys.modules, real.__name__, moved)
+    with pytest.raises(ImportError):
+        from pyspark.sql.pandas.types import to_arrow_type  # noqa: F401
+    key = "date_add(DATE'2024-01-01', CAST(id AS INT))" if id_type == "date" else "id / 4"
+
+    def frame(n):
+        return spark.range(n).selectExpr(
+            f"CAST({key} AS {id_type}) AS vec_id",
+            "array(cos(id), sin(id), CAST(id % 3 AS DOUBLE)) AS embedding",
+        )
+
+    def ranks(df):
+        return {(r["query_id"], r["rank"]): (r["neighbor_id"], r["sim"]) for r in df.collect()}
+
+    emb, queries = frame(40).coalesce(2), frame(3)
+    got = ranks(cosine_topk_vectorized(queries, emb, k=4))
+    want = ranks(cosine_topk(queries, emb, k=4))
+    assert len(got) == 12 and set(got) == set(want)
+    for qr, (nid, sim) in want.items():
+        assert got[qr][0] == nid and abs(got[qr][1] - sim) <= 1e-6
 
 
 def test_hyperplane_lsh_recall_and_no_false_positives(spark):
