@@ -67,19 +67,38 @@ def _tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated ONCE and bound to the
+    lambda variable — a one-element ``transform`` is the only let-binding
+    Spark expressions have, and higher-order functions are interpreted
+    (no common-subexpression elimination), so an expression captured
+    inside a lambda is otherwise re-evaluated on every invocation."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def shingles(text: Column, k: int = 3) -> Column:
-    """Distinct k-token shingles as an array column (JVM-side)."""
-    toks = _tokens(text)
-    n = F.size(toks)
-    return F.array_distinct(
-        F.when(
+    """Distinct k-token shingles as an array column (JVM-side).
+
+    The token array is bound once with :func:`_let` and the size, the
+    index sequence and every shingle's ``slice`` read that bound array.
+    Capturing the inlined ``split`` inside the per-shingle lambda instead
+    re-splits the whole document once per shingle (the lambda is
+    interpreted, nothing deduplicates it), which makes shingling
+    quadratic in document length: at 180k total tokens, 2,000-token
+    documents took 6.6 s that way against 0.20 s bound once (4 vCPUs).
+    The shingle strings are byte-identical either way."""
+
+    def body(toks: Column) -> Column:
+        n = F.size(toks)
+        return F.when(
             n >= k,
             F.transform(
                 F.sequence(F.lit(0), n - k),
                 lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
             ),
         ).otherwise(F.array(F.concat_ws(" ", toks)))
-    )
+
+    return F.array_distinct(_let(_tokens(text), body))
 
 
 #: Mersenne prime 2^31−1 for the universal-hash permutation family.
@@ -191,15 +210,17 @@ def _score_barrier(x: Column, seed: int = 42) -> Column:
     """Pass-through for a similarity/Jaccard score column that stops the
     optimizer from duplicating the (non-cheap) score expression.
 
-    ``greatest(x, rand(seed) - 3.0)`` is value-identical to ``x`` for
-    every value these operators can produce — Jaccard is in [0, 1],
-    cosine in [-1-ε, 1+ε], NaN wins ``greatest`` under Spark's NaN-is-
-    largest ordering, and the rand term lies in [-3, -2) — but the
-    expression is NON-DETERMINISTIC, which (a) stops CollapseProject
-    from inlining the score back over its materialized inputs and (b)
-    stops PushPredicateThroughNonJoin from cloning a ``score >=
-    threshold`` filter (and with it the full score expression) into the
-    join condition below.  Without it, the committed r12 plan evaluated
+    ``x - rand(seed) * 0.0`` is value-identical to ``x`` for EVERY input:
+    ``rand`` lies in [0, 1), so the product is always +0.0, and
+    subtracting +0.0 returns any double unchanged — ±0.0, ±Infinity and
+    NaN included — while a NULL score stays NULL.  There is no domain
+    precondition and no threshold a caller could pick that lets the rand
+    draw decide a row.  But the expression is NON-DETERMINISTIC, which
+    (a) stops CollapseProject from inlining the score back over its
+    materialized inputs and (b) stops PushPredicateThroughNonJoin from
+    cloning a ``score >= threshold`` filter (and with it the full score
+    expression) into the join condition below.  Without it, the
+    committed r12 plan evaluated
     ``array_intersect`` up to 4× per verified pair: twice inside the
     join condition (no subexpression elimination there) and twice more
     in the output projection (see
@@ -210,14 +231,9 @@ def _score_barrier(x: Column, seed: int = 42) -> Column:
     mark-non-deterministic-to-stop-duplication principle applied to a
     JVM expression).  A plain ``rand() < -1`` OR-guard on the filter
     does NOT work: Spark 4 folds comparisons outside Rand's known
-    [0, 1) range.
-
-    Only sound where (1) the wrapped score is NaN or ≥ -2 (so the rand
-    arm never wins; ±Infinity scores — possible only from Infinity
-    inputs — are filtered identically either way because every caller
-    thresholds at > -2), and (2) under task retries a re-drawn rand
-    changes nothing because the rand arm is never selected."""
-    return F.greatest(x, F.rand(seed) - F.lit(3.0))
+    [0, 1) range.  Under task retries a re-drawn rand changes nothing,
+    since the product is +0.0 for every draw."""
+    return x - F.rand(seed) * F.lit(0.0)
 
 
 def _pair_expansion(ids: str) -> str:
@@ -397,9 +413,9 @@ def _lsh_sigs(
     hash_family: str = "xxhash64",
 ) -> DataFrame:
     """(id, shingles, sig, hsh) per doc — the per-row stage of the LSH
-    pipeline.  Module-level (not inlined in ``minhash_lsh_pairs``) so
-    diagnostics like ``tools/profile_neardedup.py`` time the REAL
-    operator stages instead of a hand-mirrored copy that desyncs.
+    pipeline.  Its cost is the ``operators.dedup.signatures`` span of
+    ``perfbench/run.py --workload near_dup_batch --trace 1``, which
+    times the real operator (this stage plus its eager checkpoint).
 
     The shingle array is materialized once, then the signature derives
     from the column — otherwise the shingle expression is inlined into
@@ -637,8 +653,7 @@ def _pairs_from_sigs(
     # pinned by tests/test_operators.py; was up to 4× — see
     # _score_barrier's docstring for the r12 plan evidence and the
     # 8-core A/B).  jaccard = inter/(a_n+b_n-inter) is the identical
-    # double expression tree as size-based union, and jaccard ∈ [0, 1]
-    # (union ≥ 1: hsh always has ≥ 1 element), so the barrier is exact.
+    # double expression tree as size-based union.
     sh = sigs.select("id", "hsh", F.size("hsh").alias("n"))
     sh = F.broadcast(sh) if broadcast_verify else sh.hint("shuffle_hash")
     candidates = (
@@ -727,9 +742,9 @@ def connected_components(
     for leaves, and both star moves re-emit the same edge set.
     Necessity: a duplicate leaf ({(5,9),(6,9)} — shared leaf, missing
     root-root edge) or a root-and-leaf node is rewired by the next
-    small-star.  The probe is one leaf-degree aggregation plus a
-    node-set semi-join per round — ~6× cheaper than the extra full
-    confirm round an edge-checksum fixpoint test costs.
+    small-star.  The probe is one per-node aggregation, run on the
+    contracted edge set and after every round — ~6× cheaper than the
+    extra full confirm round an edge-checksum fixpoint test costs.
 
     Input: any DataFrame of undirected pairs (direction/duplicates/
     self-loops tolerated).  ``canonical_input=True`` is the caller's
@@ -847,10 +862,12 @@ def connected_components(
         )
         return violations.isEmpty()
 
-    # do-while: probe only AFTER a round — real pair sets are never
-    # pre-converged, so a leading probe is a wasted job on every call;
-    # an already-star input (idempotent re-runs) just pays one no-op
-    # round, which the probe then certifies.
+    # Probe BEFORE each round, starting with the contracted edge set:
+    # the pre-contraction already leaves LSH pair graphs a star forest
+    # (perfbench near_dup_batch: 6,569 verified pairs contract to 0
+    # edges on seeds 70–74), so they run no star round at all; a graph
+    # that needs rounds pays one extra probe over the contracted set,
+    # which is smaller than the pair set.
     #
     # The per-round checkpoint is LAZY (r13, VERDICT item 4): the
     # probe's aggregation is always the next action, and its shuffle-map
@@ -864,21 +881,19 @@ def connected_components(
     # the pre-contraction checkpoints above keep eager=True because
     # their consumers are concurrent stages that would otherwise race to
     # recompute the expensive upstream.)
-    converged = False
-    for _ in range(max_iter):
+    rounds = 0
+    while not _is_star_forest(e):
+        if rounds == max_iter:
+            # truncated output would be silently-wrong partial components
+            raise RuntimeError(
+                f"connected_components did not converge within max_iter={max_iter} "
+                "rounds (edge set is not yet a star forest per the structural "
+                "probe); raise max_iter — large-star/small-star needs O(log n) "
+                "rounds"
+            )
         e = _star(_directed(e), large=True)
         e = _star(_directed(e), large=False).localCheckpoint(eager=False)
-        if _is_star_forest(e):
-            converged = True
-            break
-    if not converged:
-        # truncated output would be silently-wrong partial components
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds (edge set is not yet a star forest per the structural "
-            "probe); raise max_iter — large-star/small-star needs O(log n) "
-            "rounds"
-        )
+        rounds += 1
     # converged edge set is a star per component OF LABELS: (leaf, root)
     # with root the component min; the certified star-forest shape makes
     # a union-level distinct redundant (probe invariants).  Original
@@ -1016,21 +1031,22 @@ def simhash_signatures_portable(
 
     Scale shape: explode to (doc, token, bit) votes — three narrow
     integer aggregations, all map-side combinable; no Python, no
-    windows.  sha256 is evaluated per (token, nibble) by codegen
-    (CollapseProject re-inlines the hex column into the 64-way
-    transform — the r1 MinHash lesson), which is acceptable for the
-    bounded catalog gate; the throughput path stays
+    windows.  Each token's sha256 is computed once and bound with
+    :func:`_let`; the 64-way nibble ``transform`` reads the bound hex
+    string (inlined into the interpreted lambda it would be recomputed
+    per nibble, 64 times per token).  The throughput path stays
     :func:`simhash_signatures` on xxhash64."""
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(_tokens(F.col(text_col)))).alias("token"),
     )
-    nib = toks.select(
-        "id",
-        F.posexplode(
-            F.expr("transform(sequence(1, 64), i -> substring(sha2(token, 256), i, 1))")
-        ).alias("b", "nibble"),
+    nibbles = _let(
+        F.sha2(F.col("token"), 256),
+        lambda hx: F.transform(
+            F.sequence(F.lit(1), F.lit(64)), lambda i: F.substring(hx, i, 1)
+        ),
     )
+    nib = toks.select("id", F.posexplode(nibbles).alias("b", "nibble"))
     parity = (F.instr(F.lit("0123456789abcdef"), F.col("nibble")) - 1) % 2
     votes = (
         nib.withColumn("vote", F.when(parity == 1, F.lit(1)).otherwise(F.lit(-1)))

@@ -242,10 +242,8 @@ def hyperplane_lsh_pairs(
     # materialized ONCE per pair behind _score_barrier (r13): without
     # the barrier the threshold filter is pushed into the join condition
     # and the interpreted-HOF dot product runs twice per surviving pair
-    # (once in the condition, once in the output projection).  cosine is
-    # in [-1-ε, 1+ε] ≥ -2 (or NaN), so the barrier is exact, and
-    # round(sim, 6) for survivors only sees sim ≥ threshold where the
-    # barrier is the identity.
+    # (once in the condition, once in the output projection).  The
+    # barrier is the identity on every double and on NULL.
     from gmail_etl_spark.operators.dedup import _score_barrier
 
     vecs = sig.select("id", "v", _norm(F.col("v")).alias("nrm")).hint("shuffle_hash")

@@ -418,13 +418,35 @@ def test_connected_components_long_path_converges(spark):
     assert comp.count() == 64
 
 
-def test_connected_components_canonical_input_and_forest_stop(spark):
+def test_connected_components_canonical_input_and_forest_stop(spark, monkeypatch):
     """canonical_input=True (the LSH-output contract: distinct u<v) must
     produce identical labels to the default path, the star-forest
     convergence probe must accept an already-star input without running
     a round, and a star-forest input with a NON-min root must still be
     rewired (forest shape alone isn't the fixpoint — root minimality
-    is, which canonical u<v encodes)."""
+    is, which canonical u<v encodes).
+
+    Rounds are counted through ``_directed``: the pre-contraction calls
+    it once, and every large-star/small-star round twice more."""
+    from gmail_etl_spark.operators import dedup
+
+    calls = []
+    real_directed = dedup._directed
+
+    def counting_directed(e):
+        calls.append(1)
+        return real_directed(e)
+
+    monkeypatch.setattr(dedup, "_directed", counting_directed)
+
+    def labels_and_rounds(df, **kw):
+        calls.clear()
+        got = {
+            (r["node"], r["component"])
+            for r in connected_components(df, **kw).collect()
+        }
+        return got, (len(calls) - 1) // 2
+
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 4), (10, 11), (12, 13), (13, 14)],
         "u long, v long",
@@ -442,25 +464,39 @@ def test_connected_components_canonical_input_and_forest_stop(spark):
         (10, 10), (11, 10),
         (12, 12), (13, 12), (14, 12),
     }
-    # already a canonical star forest: accepted as-is (and correct)
+    # already a canonical star forest: accepted as-is (and correct),
+    # with no star round — the probe runs before the first round
     star = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4), (7, 8)], "u long, v long"
     )
-    got = {
-        (r["node"], r["component"])
-        for r in connected_components(star, canonical_input=True).collect()
-    }
+    got, rounds = labels_and_rounds(star, canonical_input=True)
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (8, 7)}
+    assert rounds == 0
     # shared leaf: u/v node sets are disjoint but node 9 has TWO roots
-    # — NOT a star forest; the probe must reject it and the rounds must
-    # merge 5,6,9 into one component (regression: a disjointness-only
-    # probe accepted this and emitted two labels for node 9)
+    # — NOT a star forest; 5,6,9 must merge into one component
+    # (regression: a disjointness-only probe accepted this and emitted
+    # two labels for node 9).  The pre-contraction relabels 9 to 5 and
+    # leaves the single edge (5, 6), which the probe then accepts.
     shared = spark.createDataFrame([(5, 9), (6, 9)], "u long, v long")
-    got = {
-        (r["node"], r["component"])
-        for r in connected_components(shared, canonical_input=True).collect()
-    }
+    got, _ = labels_and_rounds(shared, canonical_input=True)
     assert got == {(5, 5), (6, 5), (9, 5)}
+    # near-cliques (the LSH pair-graph shape): each component's minimum
+    # is adjacent to every member, so the pre-contraction labels the
+    # whole component with it and leaves no edge — no round runs
+    clique = [(a, b) for a in range(8) for b in range(a + 1, 8)
+              if (a, b) not in {(2, 5), (3, 7), (1, 6)}]
+    clique += [(a, b) for a in range(20, 25) for b in range(a + 1, 25)
+               if (a, b) != (21, 23)]
+    got, rounds = labels_and_rounds(
+        spark.createDataFrame(clique, "u long, v long"), canonical_input=True
+    )
+    assert got == {(n, 0) for n in range(8)} | {(n, 20) for n in range(20, 25)}
+    assert rounds == 0
+    # a path contracts to a shorter path, which still needs rounds
+    path = spark.createDataFrame([(i, i + 1) for i in range(8)], "u long, v long")
+    got, rounds = labels_and_rounds(path, canonical_input=True)
+    assert got == {(n, 0) for n in range(9)}
+    assert rounds >= 1
 
 
 def test_near_dedup_keeps_canonical_and_singletons(spark):
@@ -859,10 +895,27 @@ def test_minhash_portable_family_signature_reference(spark):
         assert set(rows[i]["hsh"]) == want_hsh
 
 
+def _lambda_bodies(plan: str) -> list[str]:
+    """Text of every ``lambdafunction(...)`` in a plan string."""
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start != -1:
+        depth = 0
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        bodies.append(plan[start : end + 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
 def test_simhash_portable_reference(spark):
     """simhash_signatures_portable (q45) equals a pure-Python replay:
     bit b = sign of Σ_tokens (±1 by parity of sha256 hex nibble b),
-    packed into (sim_hi, sim_lo) 32-bit halves."""
+    packed into (sim_hi, sim_lo) 32-bit halves.  Each token's sha256 is
+    computed once, outside the 64-way nibble lambda (inside it, sha2 ran
+    64 times per token)."""
     import hashlib
 
     from gmail_etl_spark.operators.dedup import simhash_signatures_portable
@@ -871,6 +924,12 @@ def test_simhash_portable_reference(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
+    plan = (
+        simhash_signatures_portable(df, "doc_id", "text")._jdf.queryExecution()
+        .optimizedPlan().toString()
+    )
+    assert plan.count("sha2(") == 1, plan
+    assert not any("sha2(" in b for b in _lambda_bodies(plan)), plan
     got = {
         r["id"]: (r["sim_hi"], r["sim_lo"])
         for r in simhash_signatures_portable(df, "doc_id", "text").collect()
@@ -889,6 +948,45 @@ def test_simhash_portable_reference(spark):
             else:
                 lo |= bit << b
         assert got[i] == (hi, lo), i
+
+
+def test_shingles_split_once_and_reference(spark):
+    """shingles binds the token array once: the optimized plan holds one
+    ``split(``, outside every lambda (captured inside the per-shingle
+    lambda it re-splits the document once per shingle, since lambdas
+    get no common-subexpression elimination).  Values equal a
+    pure-Python reference for k = 1..4 on null, empty, short, repeated-
+    token and consecutive-space (empty-token) inputs."""
+    from gmail_etl_spark.operators.dedup import shingles
+
+    texts = [None, "", "a", "a b", "a b c d e", "x x x x x",
+             "a  b   c", " lead trail ", "p q p q p q"]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    plan = (
+        df.select(shingles(F.col("t"), 3).alias("s"))._jdf.queryExecution()
+        .optimizedPlan().toString()
+    )
+    assert plan.count("split(") == 1, plan
+    assert not any("split(" in b for b in _lambda_bodies(plan)), plan
+
+    def ref(text, k):
+        if text is None:
+            # size(NULL) is NULL, so the short-document arm runs:
+            # concat_ws over a NULL array is ""
+            return [""]
+        toks = text.split(" ")
+        if len(toks) < k:
+            return [" ".join(toks)]
+        out = []
+        for i in range(len(toks) - k + 1):
+            sh = " ".join(toks[i : i + k])
+            if sh not in out:
+                out.append(sh)
+        return out
+
+    for k in (1, 2, 3, 4):
+        got = [r["s"] for r in df.select(shingles(F.col("t"), k).alias("s")).collect()]
+        assert got == [ref(t, k) for t in texts], k
 
 
 def test_cms_oracle_constants_pinned(spark):
@@ -2132,18 +2230,28 @@ def test_verify_stage_single_intersect_plan(spark):
 
 
 def test_score_barrier_is_value_identity(spark):
-    """_score_barrier must be a bit-exact pass-through on the whole
-    range the verify/similarity operators produce: [0, 1] Jaccard,
-    [-1-eps, 1+eps] cosine, and NaN (which Spark's greatest treats as
-    largest, same as the `NaN >= t` comparisons it replaces)."""
+    """_score_barrier must be a bit-exact pass-through on every double
+    and on NULL, with no domain precondition: [0, 1] Jaccard,
+    [-1-eps, 1+eps] cosine, scores below -2 down to -Infinity, -0.0
+    (sign kept), NULL (stays NULL) and NaN — so no threshold lets the
+    rand draw decide a row."""
+    import math
+
     from gmail_etl_spark.operators.dedup import _score_barrier
 
-    vals = [0.0, 1.0, 0.5, 1e-300, -1.0, -1.0000000000000002, 1.0000000000000002, -2.0]
+    vals = [0.0, 1.0, 0.5, 1e-300, -1.0, -1.0000000000000002, 1.0000000000000002, -2.0,
+            None, -2.5, -5.0, -1e300, float("-inf"), float("inf"), -0.0]
     df = spark.createDataFrame([(v,) for v in vals], "x double").select(
         "x", _score_barrier(F.col("x")).alias("b")
     )
     for r in df.collect():
-        assert r["b"] == r["x"], r
+        if r["x"] is None:
+            assert r["b"] is None, r
+        else:
+            assert r["b"] == r["x"], r
+            assert math.copysign(1, r["b"]) == math.copysign(1, r["x"]), r
+    low = df.filter(F.col("b") >= -10.0).select("x").collect()
+    assert sorted(r["x"] for r in low) == sorted(v for v in vals if v is not None and v >= -10)
     nan = (
         spark.sql("select cast('NaN' as double) as x")
         .select(_score_barrier(F.col("x")).alias("b"))

@@ -430,11 +430,12 @@ def test_recursive_reachability_matches_python_bfs(spark):
 
 def test_connected_components_random_graphs_vs_union_find(spark):
     """Seeded structural fuzz of the round-4 CC surgery (star-forest
-    probe, do-while, canonical fast path): random graphs of adversarial
-    shapes — sparse, dense, long chains, shared-leaf bipartites, stars,
-    self-loops/duplicates — labeled identically to a Python union-find,
-    through BOTH the default and the canonical_input entry (fed
-    canonicalized edges)."""
+    probe before each round, canonical fast path): random graphs of
+    adversarial shapes — sparse, dense, long chains, shared-leaf
+    bipartites, stars, self-loops/duplicates, and a near-clique whose
+    pre-contraction leaves no edge — labeled identically to a Python
+    union-find, through BOTH the default and the canonical_input entry
+    (fed canonicalized edges)."""
     import random
 
     from pyspark.sql import functions as F
@@ -469,6 +470,8 @@ def test_connected_components_random_graphs_vs_union_find(spark):
     shapes.append([(i, 100) for i in range(5)]
                   + [(i, 200) for i in range(3, 8)])            # shared leaves
     shapes.append([(1, 1), (2, 3), (3, 2), (2, 3)])             # loops + dups
+    shapes.append([(a, b) for a in range(12) for b in range(a + 1, 12)
+                   if (a + b) % 5 or a == 0])                   # near-clique
 
     for edges in shapes:
         clean = {(min(u, v), max(u, v)) for u, v in edges if u != v}

@@ -92,7 +92,8 @@ def main() -> None:
     # NOTE: connected_components EXECUTES jobs at build time (iterative
     # localCheckpoint rounds), so its "plan" is the final star-forest
     # readout plan; the before/after evidence for the iterative body is
-    # the per-stage timing split from tools/profile_neardedup.py.
+    # the per-layer timing of ``perfbench/run.py --trace 1`` (span
+    # operators.dedup.connected_components).
     entries["near_dedup_100k_docs"] = _near_dedup_df
 
     # the pair-generation subplan (buckets -> candidates -> verify) is
