@@ -21,7 +21,7 @@ the catalog.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -47,14 +47,6 @@ def exact_dedup(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
             F.min("_id").alias("canonical_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
-    )
-
-
-def dedup_keep_first(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
-    """Window-based dedup keeping the first row per key (ST2 batch form)."""
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    return (
-        df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
     )
 
 
@@ -130,45 +122,19 @@ def _mh_ab(i: int) -> tuple[int, int]:
     return a, b
 
 
-def minhash_signature(
-    sh: Column, n_hashes: int = 32, hash_family: str = "xxhash64"
-) -> Column:
-    """MinHash signature via one base hash + linear permutations.
-
-    Each shingle is string-hashed ONCE (→ [0, p), p = 2^31−1), then
-    permutation i is the universal-hash map h ↦ (a_i·h + b_i) mod p
-    (Carter–Wegman; the standard MinHash family, e.g. Broder 1997) —
-    integer ops over the pre-hashed array instead of re-hashing every
-    string n_hashes times, which profiling showed dominated the LSH
-    stage.  a_i·h < 2^31·2^31 = 2^62 keeps the product inside long
-    range, so ANSI arithmetic never overflows.  Constants are fixed
-    avalanche mixes of i — deterministic across sessions.
-
-    ``hash_family`` picks the base hash: ``"xxhash64"`` (default, the
-    JVM-codegen production family) or ``"sha256"`` (the portable
-    cross-engine family of :func:`_sha_base31`, exactly replayable by a
-    DuckDB oracle — the hash-oracled catalog gate q44 runs on it).
-
-    Degenerate inputs (unreachable via ``shingles``, which always emits
-    ≥ 1 element, but this is a public function over arbitrary array
-    columns): an EMPTY array yields an array of the 2^31−1 sentinel
-    (the fold's init value — the r12 one-pass ``aggregate`` fold; the
-    pre-r12 per-permutation ``array_min`` form yielded an array of
-    nulls), and a NULL array yields NULL (pre-r12: an array of nulls).
-    Gate degenerate rows upstream if the older null convention matters
-    to a caller."""
-    if hash_family == "sha256":
-        base = F.transform(sh, _sha_base31)
-    elif hash_family == "xxhash64":
-        base = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_P)))
-    else:
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
-    return _sig_from_base(base, n_hashes)
-
-
 def _sig_from_base(base: Column, n_hashes: int) -> Column:
     """Signature array from a PRE-HASHED base array (values in [0, p)):
     n_hashes Carter–Wegman permutation minima, folded in ONE pass.
+
+    Each shingle is string-hashed ONCE upstream (→ [0, p), p = 2^31−1;
+    see ``_lsh_sigs``), then permutation i is the universal-hash map
+    h ↦ (a_i·h + b_i) mod p (Carter–Wegman; the standard MinHash family,
+    e.g. Broder 1997) — integer ops over the pre-hashed array instead of
+    re-hashing every string n_hashes times, which profiling showed
+    dominated the LSH stage.  a_i·h < 2^31·2^31 = 2^62 keeps the product
+    inside long range, so ANSI arithmetic never overflows.  Constants
+    are fixed avalanche mixes of i (:func:`_mh_ab`) — deterministic
+    across sessions.
 
     Two layers of per-row-work discipline (both measured on the 100k-doc
     bench, identical bucket checksums):
@@ -188,7 +154,10 @@ def _sig_from_base(base: Column, n_hashes: int) -> Column:
     minima for any non-empty base (``shingles`` guarantees ≥1 element
     per row, so the empty-array corner — null under array_min, the p
     sentinel under the fold — is unreachable); p itself is never a hash
-    value since pmod yields [0, p)."""
+    value since pmod yields [0, p).  On degenerate input the fold's
+    conventions hold: an EMPTY base yields an array of the 2^31−1
+    sentinel (the fold's init value), and a NULL base yields NULL.  Gate
+    degenerate rows upstream if a caller needs another convention."""
     a_arr = F.array(*[F.lit(_mh_ab(i)[0]) for i in range(n_hashes)])
     b_arr = F.array(*[F.lit(_mh_ab(i)[1]) for i in range(n_hashes)])
     init = F.transform(
@@ -227,7 +196,7 @@ def _score_barrier(x: Column, seed: int = 42) -> Column:
     ``plans/r12/near_dedup_pairs_subplan_after.txt:140-143``); measured
     on the 100k-doc bench verify stage at 8 cores: med 0.871 → 0.541 s,
     faster 6/6 interleaved rounds, identical (count, xor) checksums
-    (``tools/exp_verify_r13.py``; guide §1.2 per-task work and §4.4's
+    (``OPTIMIZATION_r13.md`` §1; guide §1.2 per-task work and §4.4's
     mark-non-deterministic-to-stop-duplication principle applied to a
     JVM expression).  A plain ``rand() < -1`` OR-guard on the filter
     does NOT work: Spark 4 folds comparisons outside Rand's known

@@ -388,11 +388,6 @@ def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
     return df.filter((F.col("media_id") % every_n) == 0)
 
 
-def binary_from_base64(col: Column) -> Column:
-    """Bridge from the raw zone's base64url text (F6) to BinaryType."""
-    return F.unbase64(F.translate(col, "-_", "+/"))
-
-
 # ---------------------------------------------------------------------------
 # perceptual image hashing (X2 × D2): dHash + multi-index Hamming pairs
 # ---------------------------------------------------------------------------

@@ -69,7 +69,7 @@ def transform_stage1(raw: DataFrame) -> DataFrame:
     # parse chain get no codegen subexpression elimination).  Measured on
     # the 20k-message bench corpus: 0.97 s inlined → 0.74 s with _hm /
     # _clean_date / _fast_ts materialized, identical all-column
-    # checksums (tools/exp_pipeline_r12.py; guide §1.2 per-task work).
+    # checksums (OPTIMIZATION_r12.md §2; guide §1.2 per-task work).
     base = raw.select(
         F.col("id"),
         F.col("payload"),

@@ -18,8 +18,10 @@ late data.
 from __future__ import annotations
 
 import json
+import itertools
 import logging
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -158,143 +160,220 @@ def sessionized_event_counts(events: DataFrame, gap: str = "5 minutes",
     )
 
 
-def _rollup_fs(spark: SparkSession, rollup_dir: str):
+# ---------------------------------------------------------------------------
+# versioned state: committed version dirs behind one ``_CURRENT`` head
+# ---------------------------------------------------------------------------
+#
+# Every stateful maintainer below (the five rollups and the near-dup
+# index) turns foreachBatch's at-least-once delivery into exactly-once
+# state with one protocol, the idempotent-sink recipe of Structured
+# Streaming (SIGMOD 2018):
+#
+# 1. write the batch's state into a new version dir;
+# 2. mark the dir committed (_COMMIT_MARKER) after ALL of its data landed;
+# 3. publish the batch id as the head (_publish_head);
+# 4. skip every replayed batch with batch_id <= head (_resolve_head).
+#
+# Crash windows, all covered by _resolve_head's fallback to the highest
+# committed dir when no pointer exists:
+#
+# - before the marker: the dir is partial and unmarked, so the fallback
+#   and every reader ignore it, and the replay overwrites it;
+# - after the marker, before the pointer moves: a surviving pointer still
+#   names the previous head, so the batch replays and rewrites its dir;
+#   with no pointer yet (the very first batch) the fallback treats the
+#   complete dir as published and skips its replay, which is correct;
+# - inside _publish_head, between deleting the old pointer and renaming
+#   the new one into place: the fallback finds the just-committed dir.
+#
+# The state dir and its checkpoint move together: batch ids are monotone
+# within ONE checkpoint lineage, so a fresh checkpoint over an existing
+# state dir treats its re-numbered batches as already merged.  That is
+# right for re-processing the same files and wrong if the fresh run also
+# carries new files in those low-numbered batches: reset both or neither.
+
+
+def _state_fs(spark: SparkSession, state_dir: str):
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(rollup_dir)
+    base = jvm.org.apache.hadoop.fs.Path(state_dir)
     return jvm, base.getFileSystem(conf), base
 
 
-#: Engine-owned commit marker for versioned state dirs.  Deliberately NOT
-#: the job committer's ``_SUCCESS``: object-store deployments commonly set
+#: Engine-owned commit marker for version dirs.  Deliberately NOT the job
+#: committer's ``_SUCCESS``: object-store deployments commonly set
 #: ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``, and a
-#: fallback gated on a marker that is never written would silently treat
-#: every fully-written version as partial — rebuilding state from one
-#: replayed batch and deleting real history.  The engine writes this file
-#: itself after ALL of a version's data lands, so the crash-window
-#: fallback in the ``_resolve_*`` helpers is committer-conf independent.
+#: fallback gated on a marker that is never written would treat every
+#: fully-written version as partial, rebuilding state from one replayed
+#: batch and deleting real history.  The engine writes this file itself
+#: after ALL of a version's data lands, so :func:`_resolve_head`'s
+#: fallback does not depend on the committer's configuration.
 _COMMIT_MARKER = "_COMMITTED"
+
+#: The head pointer: the decimal id of the last published batch.
+_HEAD = "_CURRENT"
+
+
+def _read_file(fs, path) -> str:
+    stream = fs.open(path)
+    try:
+        return bytes(stream.readAllBytes()).decode("utf-8")
+    finally:
+        stream.close()
+
+
+def _write_file(fs, path, text: str) -> None:
+    out = fs.create(path, True)
+    try:
+        out.write(text.encode("utf-8"))
+    finally:
+        out.close()
 
 
 def _mark_committed(spark: SparkSession, dir_path: str) -> None:
     """Create the engine-owned commit marker inside ``dir_path``."""
-    jvm, fs, _ = _rollup_fs(spark, dir_path)
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(dir_path, _COMMIT_MARKER), True)
-    out.close()
+    jvm, fs, _ = _state_fs(spark, dir_path)
+    _write_file(fs, jvm.org.apache.hadoop.fs.Path(dir_path, _COMMIT_MARKER), "")
 
 
-def _is_committed(jvm, fs, root: str, name: str) -> bool:
-    return fs.exists(
-        jvm.org.apache.hadoop.fs.Path(f"{root.rstrip('/')}/{name}", _COMMIT_MARKER)
-    )
+def _dir_interval(name: str) -> tuple[int, int] | None:
+    """Batch-id interval ``(lo, hi)`` a version dir covers, or None for
+    a non-conforming stray: a stray ``_bstale`` dir must be skipped, not
+    abort every later micro-batch with a ValueError.  Three dir kinds:
 
-
-def _dir_seq(name: str, prefix: str) -> int | None:
-    """Numeric suffix of a versioned dir name (``_v…``/``_b…``/``_c…``),
-    or None for non-conforming strays — a stray ``_bstale`` dir must be
-    skipped, not abort every subsequent micro-batch with ValueError."""
-    if not name.startswith(prefix):
-        return None
-    suffix = name[len(prefix):]
-    return int(suffix) if suffix.isdigit() else None
-
-
-def _resolve_rollup_version(spark: SparkSession, rollup_dir: str) -> tuple[str, int]:
-    """Current rollup version: (data dir, last merged batch_id), or
-    ("", -1) when no rollup exists yet.
-
-    Prefers the ``_CURRENT`` pointer file; if the pointer is missing but
-    version dirs exist (the sub-second crash window between publishing a
-    new pointer and the old one's removal — or a crash during the very
-    FIRST version's write, before any pointer existed — or a manual
-    delete), falls back to the highest COMMITTED ``_v`` dir.  The
-    engine-owned ``_COMMITTED`` marker (see :data:`_COMMIT_MARKER` for
-    why not the job committer's ``_SUCCESS``) gates the fallback: a
-    partial first-version dir (crash before the marker) must not be
-    trusted, or its replayed batch would be skipped against corrupt
-    state; any later partial dir is harmless because the data write and
-    marker complete before the old pointer is touched, so a surviving
-    pointer always wins.
+    - ``_v<seq>``: the rollup's state after batch ``seq`` → ``[seq, seq]``;
+    - ``_b<seq>``: one near-dup index append batch → ``[seq, seq]``;
+    - ``_m<lo>_<hi>``: a tiered fold of the index dirs whose intervals
+      tile ``[lo, hi]`` (see :func:`_plan_index_fold`).
     """
-    jvm, fs, base = _rollup_fs(spark, rollup_dir)
-    ptr = jvm.org.apache.hadoop.fs.Path(rollup_dir, "_CURRENT")
-    if fs.exists(ptr):
-        stream = fs.open(ptr)
-        try:
-            raw = bytes(stream.readAllBytes())
-        finally:
-            stream.close()
-        batch_id, name = raw.decode("utf-8").strip().split("\t")
-        return f"{rollup_dir.rstrip('/')}/{name}", int(batch_id)
-    if fs.exists(base):
-        # either marker proves the data write completed: _COMMITTED is
-        # engine-written (survives marksuccessfuljobs=false deployments),
-        # _SUCCESS is the job committer's own post-commit marker — a dir
-        # carrying it was fully written by a PRE-marker version of this
-        # code, and must stay recoverable after an upgrade (a fallback
-        # that ignored it would rebuild from one replayed batch and
-        # delete real history).  A dir with NEITHER is partial.
-        versions = sorted(
-            name
-            for s in fs.listStatus(base)
-            if s.isDirectory()
-            and _dir_seq(name := s.getPath().getName(), "_v") is not None
-            and (
-                _is_committed(jvm, fs, rollup_dir, name)
-                or fs.exists(
-                    jvm.org.apache.hadoop.fs.Path(
-                        f"{rollup_dir.rstrip('/')}/{name}", "_SUCCESS"
-                    )
-                )
-            )
-        )
-        if versions:
-            return f"{rollup_dir.rstrip('/')}/{versions[-1]}", int(versions[-1][2:])
-    return "", -1
+    kind, parts = name[:2], name[2:].split("_")
+    if not all(p.isdecimal() for p in parts):
+        return None
+    if kind in ("_v", "_b") and len(parts) == 1:
+        return int(parts[0]), int(parts[0])
+    if kind == "_m" and len(parts) == 2 and int(parts[0]) <= int(parts[1]):
+        return int(parts[0]), int(parts[1])
+    return None
 
 
-def _publish_rollup_version(
-    spark: SparkSession, rollup_dir: str, merged: DataFrame, batch_id: int
-) -> None:
-    """Write ``merged`` as ``_v<batch_id>`` and atomically publish it via
-    the ``_CURRENT`` pointer (shared by the additive rollup and the
-    sketch-state rollup — see :func:`maintain_daily_rollup` for the
-    crash-safety contract)."""
-    version_name = f"_v{batch_id:015d}"
-    new_dir = f"{rollup_dir.rstrip('/')}/{version_name}"
-    merged.write.mode("overwrite").parquet(new_dir)
-    _mark_committed(spark, new_dir)
-    jvm, fs, base = _rollup_fs(spark, rollup_dir)
-    ptr = jvm.org.apache.hadoop.fs.Path(rollup_dir, "_CURRENT")
-    tmp = jvm.org.apache.hadoop.fs.Path(rollup_dir, f"_CURRENT.{batch_id}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(f"{batch_id}\t{version_name}".encode("utf-8"))
-    finally:
-        out.close()
-    if fs.exists(ptr):
-        fs.delete(ptr, False)  # rename-over is non-portable; _resolve
-        # falls back to the newest _v dir in this sub-second window
-    fs.rename(tmp, ptr)
-    # best-effort cleanup of superseded versions (numeric-suffix guard:
-    # never touch non-conforming stray dirs)
+def _version_dirs(
+    spark: SparkSession, state_dir: str, committed: bool = True
+) -> list[tuple[int, int, str]]:
+    """``(lo, hi, name)`` of every conforming version dir under
+    ``state_dir`` — only the ones carrying :data:`_COMMIT_MARKER` when
+    ``committed``, partial ones too otherwise."""
+    jvm, fs, base = _state_fs(spark, state_dir)
+    if not fs.exists(base):
+        return []
+    root = state_dir.rstrip("/")
+    out = []
     for s in fs.listStatus(base):
         name = s.getPath().getName()
-        if (
-            s.isDirectory()
-            and _dir_seq(name, "_v") is not None
-            and name != version_name
+        iv = _dir_interval(name) if s.isDirectory() else None
+        if iv is not None and (
+            not committed
+            or fs.exists(
+                jvm.org.apache.hadoop.fs.Path(f"{root}/{name}", _COMMIT_MARKER)
+            )
         ):
-            fs.delete(s.getPath(), True)
+            out.append((iv[0], iv[1], name))
+    return out
+
+
+def _resolve_head(spark: SparkSession, state_dir: str) -> int:
+    """Last published batch_id of a versioned state dir, or -1 when
+    nothing was published: the :data:`_HEAD` pointer when present, else
+    the highest interval end among the committed version dirs (the crash
+    windows this fallback covers are listed above :func:`_state_fs`)."""
+    jvm, fs, _ = _state_fs(spark, state_dir)
+    ptr = jvm.org.apache.hadoop.fs.Path(state_dir, _HEAD)
+    if fs.exists(ptr):
+        return int(_read_file(fs, ptr))
+    return max((hi for _, hi, _ in _version_dirs(spark, state_dir)), default=-1)
+
+
+def _publish_head(spark: SparkSession, state_dir: str, batch_id: int) -> None:
+    """Publish ``batch_id`` as the head: write a temp file, delete the
+    old pointer and rename the temp into place (rename-over is not
+    portable across Hadoop filesystems; :func:`_resolve_head` covers the
+    moment with no pointer)."""
+    jvm, fs, _ = _state_fs(spark, state_dir)
+    ptr = jvm.org.apache.hadoop.fs.Path(state_dir, _HEAD)
+    tmp = jvm.org.apache.hadoop.fs.Path(state_dir, f"{_HEAD}.{batch_id}.tmp")
+    _write_file(fs, tmp, str(batch_id))
+    if fs.exists(ptr):
+        fs.delete(ptr, False)
+    fs.rename(tmp, ptr)
+
+
+def _delete_version_dirs(
+    spark: SparkSession, state_dir: str, names: list[str]
+) -> None:
+    """Best-effort recursive delete of version dirs by name — the single
+    choke point for superseded-state cleanup, so crash-injection tests
+    can fault it and prove readers and replay never depended on the
+    deletion having run."""
+    jvm, fs, _ = _state_fs(spark, state_dir)
+    root = state_dir.rstrip("/")
+    for name in names:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/{name}"), True)
+
+
+def _rollup_dir_at(rollup_dir: str, batch_id: int) -> str:
+    """The rollup's version dir holding its state after ``batch_id``."""
+    return f"{rollup_dir.rstrip('/')}/_v{batch_id:015d}"
+
+
+def _maintain_rollup(
+    spark: SparkSession,
+    events_dir: str,
+    rollup_dir: str,
+    checkpoint_dir: str,
+    merge: Callable[[DataFrame, DataFrame | None], DataFrame],
+) -> None:
+    """Run a versioned rollup over the events stream: each new batch's
+    ``merge(batch_df, prev)`` — ``prev`` the published state, None before
+    the first publish — is written as ``_v<batch_id>`` and published
+    under the head protocol, and the superseded versions are dropped.
+    Only a genuinely missing rollup starts from scratch: a failure
+    reading an existing version propagates instead of silently resetting
+    history."""
+
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark_l = batch_df.sparkSession
+        head = _resolve_head(spark_l, rollup_dir)
+        if batch_id <= head:
+            return  # at-least-once replay of an already-published merge
+        prev = None
+        if head >= 0:
+            prev = spark_l.read.parquet(_rollup_dir_at(rollup_dir, head))
+        new_dir = _rollup_dir_at(rollup_dir, batch_id)
+        merge(batch_df, prev).write.mode("overwrite").parquet(new_dir)
+        _mark_committed(spark_l, new_dir)
+        _publish_head(spark_l, rollup_dir, batch_id)
+        superseded = _version_dirs(spark_l, rollup_dir, committed=False)
+        new_name = new_dir.rsplit("/", 1)[1]
+        _delete_version_dirs(
+            spark_l, rollup_dir, [n for _, _, n in superseded if n != new_name]
+        )
+
+    (
+        read_events_stream(spark, events_dir)
+        .writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def read_daily_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
     """Reader for the versioned rollup published by
-    :func:`maintain_daily_rollup`."""
-    data_dir, _ = _resolve_rollup_version(spark, rollup_dir)
-    if not data_dir:
+    :func:`maintain_daily_rollup` (and the other rollup maintainers)."""
+    head = _resolve_head(spark, rollup_dir)
+    if head < 0:
         raise FileNotFoundError(f"no rollup published under {rollup_dir}")
-    return spark.read.parquet(data_dir)
+    return spark.read.parquet(_rollup_dir_at(rollup_dir, head))
 
 
 def maintain_daily_rollup(
@@ -310,67 +389,37 @@ def maintain_daily_rollup(
     state, so the rollup equals the from-scratch batch aggregate after
     any sequence of triggers.
 
-    Exactly-once despite foreachBatch's at-least-once contract: each
-    merge writes a NEW version dir (``_v<batch_id>``) and then publishes
-    it by renaming a pointer file (``_CURRENT``) over the old one — an
-    atomic single-file operation, so readers (:func:`read_daily_rollup`)
-    always see a complete version and the rollup is never absent
-    mid-swap.  The pointer stores the last merged batch_id; a replayed
-    batch (crash after publish, before the checkpoint committed) is
-    detected by ``batch_id <= stored`` and skipped, so the additive
-    merge never double-counts.  Only a genuinely missing rollup starts
-    from scratch — read failures of an existing version propagate
-    instead of silently resetting history.
-
-    Contract: batch_ids are monotone within ONE checkpoint lineage; the
-    rollup and its checkpoint move together.  Pointing a fresh
-    checkpoint at an existing rollup treats the re-numbered batches as
-    already merged — correct for re-processing the same files (ids
-    restart at 0 over the same inputs), wrong if the fresh run also
-    carries new files in those low-numbered batches; reset both
-    together or neither.
+    Exactly-once despite foreachBatch's at-least-once contract, through
+    the versioned-state protocol every stateful maintainer here shares
+    (see the block above :func:`_state_fs`): each merge writes a NEW
+    committed version dir ``_v<batch_id>`` and publishes its batch id in
+    the ``_CURRENT`` pointer, so readers (:func:`read_daily_rollup`)
+    always see a complete version.  A replayed batch (crash after
+    publish, before the checkpoint committed) has ``batch_id <= head``
+    and is skipped, so the additive merge never double-counts.  The
+    rollup and its checkpoint move together; reset both or neither.
 
     At 100 TB the rollup table is tiny relative to the fact stream
     (days × types), so the merge rewrite is cheap and the stream never
     re-reads history."""
-    events = read_events_stream(spark, events_dir)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        cur_dir, last_merged = _resolve_rollup_version(spark_l, rollup_dir)
-        if batch_id <= last_merged:
-            return  # at-least-once replay of an already-published merge
-        inc = (
-            batch_df.groupBy(
-                F.to_date("ts").alias("day"), "event_type"
-            ).agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("value_cents"),
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        inc = batch_df.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("value_cents"),
+        )
+        if prev is None:
+            return inc
+        return (
+            prev.unionByName(inc)
+            .groupBy("day", "event_type")
+            .agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("value_cents").alias("value_cents"),
             )
         )
-        if cur_dir:
-            # a failure reading an EXISTING version must propagate — it
-            # is a transient/corruption signal, not "no prior rollup"
-            prev = spark_l.read.parquet(cur_dir)
-            merged = (
-                prev.unionByName(inc)
-                .groupBy("day", "event_type")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("value_cents").alias("value_cents"),
-                )
-            )
-        else:
-            merged = inc
-        _publish_rollup_version(spark_l, rollup_dir, merged, batch_id)
 
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _maintain_rollup(spark, events_dir, rollup_dir, checkpoint_dir, merge)
 
 
 # ---------------------------------------------------------------------------
@@ -485,34 +534,20 @@ def maintain_daily_distinct_sketch(
     `_CURRENT` pointer + batch_id idempotence).  At 100 TB the state is
     days × 2^lgK bytes — the stream never re-reads history to answer
     "distinct users per day so far"."""
-    events = read_events_stream(spark, events_dir)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        cur_dir, last_merged = _resolve_rollup_version(spark_l, rollup_dir)
-        if batch_id <= last_merged:
-            return  # at-least-once replay of an already-published merge
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         inc = batch_df.groupBy(F.to_date("ts").alias("day")).agg(
             F.expr("hll_sketch_agg(user_id, 12)").alias("sk")
         )
-        if cur_dir:
-            prev = spark_l.read.parquet(cur_dir)
-            merged = (
-                prev.unionByName(inc)
-                .groupBy("day")
-                .agg(F.expr("hll_union_agg(sk)").alias("sk"))
-            )
-        else:
-            merged = inc
-        _publish_rollup_version(spark_l, rollup_dir, merged, batch_id)
+        if prev is None:
+            return inc
+        return (
+            prev.unionByName(inc)
+            .groupBy("day")
+            .agg(F.expr("hll_union_agg(sk)").alias("sk"))
+        )
 
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _maintain_rollup(spark, events_dir, rollup_dir, checkpoint_dir, merge)
 
 
 def read_daily_distinct_estimates(spark: SparkSession, rollup_dir: str) -> DataFrame:
@@ -555,14 +590,9 @@ def maintain_drift_histograms(
     general recipe: any drift statistic computed from per-bin counts
     (TVD, chi-square, PSI) becomes incrementally maintainable the moment
     its sufficient statistics are additive."""
-    events = read_events_stream(spark, events_dir)
     cutoff_ts = F.lit(cutoff).cast("timestamp")
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        cur_dir, last_merged = _resolve_rollup_version(spark_l, rollup_dir)
-        if batch_id <= last_merged:
-            return  # at-least-once replay of an already-published merge
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         half1 = (F.col("ts") < cutoff_ts).cast("int")
         inc = (
             batch_df.select(
@@ -578,24 +608,15 @@ def maintain_drift_histograms(
             .groupBy("event_type", "bin")
             .agg(F.sum("h1").alias("a"), F.sum("h2").alias("b"))
         )
-        if cur_dir:
-            prev = spark_l.read.parquet(cur_dir)
-            merged = (
-                prev.unionByName(inc)
-                .groupBy("event_type", "bin")
-                .agg(F.sum("a").alias("a"), F.sum("b").alias("b"))
-            )
-        else:
-            merged = inc
-        _publish_rollup_version(spark_l, rollup_dir, merged, batch_id)
+        if prev is None:
+            return inc
+        return (
+            prev.unionByName(inc)
+            .groupBy("event_type", "bin")
+            .agg(F.sum("a").alias("a"), F.sum("b").alias("b"))
+        )
 
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _maintain_rollup(spark, events_dir, rollup_dir, checkpoint_dir, merge)
 
 
 def read_drift_tvd(spark: SparkSession, rollup_dir: str) -> DataFrame:
@@ -659,7 +680,6 @@ def maintain_latest_snapshot(
     expression.  State is keys × one row; at 100 TB the merge rewrite
     is bounded by the snapshot size, not the stream, and the same
     versioned-dir/_CURRENT publish keeps readers consistent mid-swap."""
-    events = read_events_stream(spark, events_dir)
 
     def pick_latest(df: DataFrame) -> DataFrame:
         # argmax by (ts, event_id): struct max orders lexicographically;
@@ -676,11 +696,7 @@ def maintain_latest_snapshot(
             )
         )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        cur_dir, last_merged = _resolve_rollup_version(spark_l, rollup_dir)
-        if batch_id <= last_merged:
-            return
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         inc = pick_latest(
             batch_df.select(
                 "user_id",
@@ -689,20 +705,9 @@ def maintain_latest_snapshot(
                 F.round(F.col("value") * 100).cast("bigint").alias("value_cents"),
             )
         )
-        if cur_dir:
-            prev = spark_l.read.parquet(cur_dir)
-            merged = pick_latest(prev.unionByName(inc))
-        else:
-            merged = inc
-        _publish_rollup_version(spark_l, rollup_dir, merged, batch_id)
+        return inc if prev is None else pick_latest(prev.unionByName(inc))
 
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _maintain_rollup(spark, events_dir, rollup_dir, checkpoint_dir, merge)
 
 
 def read_latest_snapshot(spark: SparkSession, rollup_dir: str) -> DataFrame:
@@ -739,18 +744,12 @@ def maintain_heavy_hitter_summary(
     guard is load-bearing, exactly as for the additive rollup.  State
     leaving any executor is ≤k rows regardless of stream volume — the
     100 TB heavy-hitter monitor with constant memory."""
-    events = read_events_stream(spark, events_dir)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        cur_dir, last_merged = _resolve_rollup_version(spark_l, rollup_dir)
-        if batch_id <= last_merged:
-            return
+    def merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         inc = batch_df.groupBy("user_id").agg(
             F.count(F.lit(1)).cast("long").alias("cnt")
         )
-        if cur_dir:
-            prev = spark_l.read.parquet(cur_dir)
+        if prev is not None:
             summed = (
                 prev.unionByName(inc)
                 .groupBy("user_id")
@@ -768,7 +767,7 @@ def maintain_heavy_hitter_summary(
         cut = ranked.filter(F.col("rk") == k + 1).select(
             F.col("cnt").alias("cut")
         )
-        merged = (
+        return (
             ranked.crossJoin(F.broadcast(cut.unionByName(
                 ranked.sparkSession.createDataFrame([(0,)], "cut bigint")
             ).agg(F.max("cut").alias("cut"))))
@@ -777,15 +776,8 @@ def maintain_heavy_hitter_summary(
             )
             .filter(F.col("cnt") > 0)
         )
-        _publish_rollup_version(spark_l, rollup_dir, merged, batch_id)
 
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _maintain_rollup(spark, events_dir, rollup_dir, checkpoint_dir, merge)
 
 
 def read_heavy_hitter_summary(spark: SparkSession, rollup_dir: str) -> DataFrame:
@@ -799,70 +791,6 @@ def read_heavy_hitter_summary(spark: SparkSession, rollup_dir: str) -> DataFrame
 # D2 × ST5 — streaming near-dup index: dedup new arrivals against the
 # retained corpus (incremental MinHash-LSH)
 # ---------------------------------------------------------------------------
-
-
-def _resolve_index_head(spark: SparkSession, index_dir: str) -> int:
-    """Last published batch_id of the append-only near-dup index, or -1.
-
-    Same pointer-with-fallback discipline as
-    :func:`_resolve_rollup_version`: prefer ``_CURRENT``; fall back to
-    the highest COMMITTED batch (``_b``) or compaction (``_c``) dir.
-    The fallback checks the engine-owned ``_COMMITTED`` marker (see
-    :data:`_COMMIT_MARKER`): a crash mid-write (before the marker,
-    before any pointer exists) leaves a partial dir without it, which
-    must NOT be treated as published — the replayed batch would
-    otherwise be skipped forever against corrupt history.  A dir WITH
-    the marker is complete, so skipping its replay is the correct
-    idempotent outcome even though the pointer never advanced."""
-    jvm, fs, base = _rollup_fs(spark, index_dir)
-    ptr = jvm.org.apache.hadoop.fs.Path(index_dir, "_CURRENT")
-    if fs.exists(ptr):
-        stream = fs.open(ptr)
-        try:
-            raw = bytes(stream.readAllBytes())
-        finally:
-            stream.close()
-        return int(raw.decode("utf-8").strip())
-    if fs.exists(base):
-        seqs = []
-        for s in fs.listStatus(base):
-            name = s.getPath().getName()
-            if not s.isDirectory():
-                continue
-            ent = _index_dir_entry(name)
-            if ent is not None and _is_committed(jvm, fs, index_dir, name):
-                seqs.append(ent[1])
-        if seqs:
-            return max(seqs)
-    return -1
-
-
-def _index_dir_entry(name: str) -> tuple[int, int] | None:
-    """Batch-id coverage interval ``(lo, hi)`` of a conforming index dir
-    name, else None — strays are skipped, never parsed into a
-    ValueError.  Three dir kinds:
-
-    - ``_b<seq>``: one append batch → covers ``[seq, seq]``.
-    - ``_m<lo>_<hi>``: a tiered fold of the live dirs whose intervals
-      tile ``[lo, hi]`` (see :func:`_plan_index_fold`).
-    - ``_c<seq>``: LEGACY full-history compaction (pre-tiered layout)
-      → covers ``[0, seq]``; still readable — the interval rule below
-      reproduces the old "newest ``_c`` folds everything before it"
-      semantics exactly.
-    """
-    seq = _dir_seq(name, "_b")
-    if seq is not None:
-        return seq, seq
-    seq = _dir_seq(name, "_c")
-    if seq is not None:
-        return 0, seq
-    if name.startswith("_m"):
-        parts = name[2:].split("_")
-        if len(parts) == 2 and parts[0].isdigit() and parts[1].isdigit():
-            lo, hi = int(parts[0]), int(parts[1])
-            if lo <= hi:
-                return lo, hi
-    return None
 
 
 def _index_entries(
@@ -882,22 +810,7 @@ def _index_entries(
     ``_m`` dir that the ≤ head gate alone would admit.  Readers and the
     shadowed-dir cleaner BOTH derive from this single function, so they
     can never disagree about what is live."""
-    if head < 0:
-        return [], []
-    jvm, fs, base = _rollup_fs(spark, index_dir)
-    if not fs.exists(base):
-        return [], []
-    entries = []
-    for s in fs.listStatus(base):
-        name = s.getPath().getName()
-        if not s.isDirectory():
-            continue
-        ent = _index_dir_entry(name)
-        if ent is None or ent[1] > head:
-            continue
-        if not _is_committed(jvm, fs, index_dir, name):
-            continue
-        entries.append((ent[0], ent[1], name))
+    entries = [e for e in _version_dirs(spark, index_dir) if e[1] <= head]
     return entries, _live_of(entries)
 
 
@@ -915,9 +828,8 @@ def _live_of(
     always strictly contains its members'), but the rule is the
     load-bearing safety invariant, so it is made TOTAL: among equal
     intervals only the lexicographically greatest name is live — a
-    pure, deterministic choice (and ``_m`` > ``_c`` > ``_b``
-    lexicographically, so a fold dir beats the append dirs it would
-    tie with)."""
+    pure, deterministic choice (and ``_m`` > ``_b`` lexicographically,
+    so a fold dir beats the append dir it would tie with)."""
     return sorted(
         (lo, hi, name)
         for lo, hi, name in entries
@@ -929,63 +841,36 @@ def _live_of(
     )
 
 
-def _index_live_entries(
-    spark: SparkSession, index_dir: str, head: int
-) -> list[tuple[int, int, str]]:
-    """Live entries only (see :func:`_index_entries`)."""
-    return _index_entries(spark, index_dir, head)[1]
-
-
-def _index_batch_dirs(spark: SparkSession, index_dir: str, head: int) -> list[str]:
-    """Live data dirs of the index at ``head``, oldest first (the path
-    form of :func:`_index_live_entries`)."""
-    return [
-        f"{index_dir.rstrip('/')}/{name}"
-        for _, _, name in _index_live_entries(spark, index_dir, head)
-    ]
-
-
-#: Sub-tables of one published index dir (layout v2, sharded for probe
-#: pruning): ``buckets/`` holds narrow (bucket, id) rows directory-
-#: partitioned by ``shard = pmod(bucket, n_shards)`` and sorted by
-#: bucket within files; ``hsh/`` holds the per-survivor shingle-hash
-#: sets keyed by id, partitioned by ``idshard = pmod(xxhash64(id),
-#: n_shards)``.  The probe reads ONLY the shards its batch keys fall
-#: in, and touches the (wide) hsh arrays only for verified candidates.
+#: Sub-tables of one published index dir (sharded for probe pruning):
+#: ``buckets/`` holds narrow (bucket, id) rows directory-partitioned by
+#: ``shard = pmod(bucket, n_shards)`` and sorted by bucket within files;
+#: ``hsh/`` holds the per-survivor shingle-hash sets keyed by id,
+#: partitioned by ``idshard = pmod(xxhash64(id), n_shards)``.  The
+#: probe reads ONLY the shards its batch keys fall in, and touches the
+#: (wide) hsh arrays only for verified candidates.
 _IDX_BUCKETS = "buckets"
 _IDX_HSH = "hsh"
 
 
 def _read_index_meta(spark: SparkSession, index_dir: str) -> dict | None:
-    jvm, fs, _ = _rollup_fs(spark, index_dir)
+    jvm, fs, _ = _state_fs(spark, index_dir)
     p = jvm.org.apache.hadoop.fs.Path(index_dir, "_META")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    return json.loads(raw.decode("utf-8"))
+    return json.loads(_read_file(fs, p)) if fs.exists(p) else None
 
 
 def _write_index_meta(spark: SparkSession, index_dir: str, meta: dict) -> None:
-    jvm, fs, _ = _rollup_fs(spark, index_dir)
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(index_dir, "_META"), True)
-    try:
-        out.write(json.dumps(meta, sort_keys=True).encode("utf-8"))
-    finally:
-        out.close()
+    jvm, fs, _ = _state_fs(spark, index_dir)
+    p = jvm.org.apache.hadoop.fs.Path(index_dir, "_META")
+    _write_file(fs, p, json.dumps(meta, sort_keys=True))
 
 
-def _count_files_under(spark: SparkSession, paths: list[str], stop_at: int) -> int:
-    """Non-hidden data files under ``paths`` (recursive), counting
-    capped at ``stop_at`` — the single lister behind both the
-    empty-dir skip and the pruning gate, so the hidden-name convention
-    lives in one place."""
+def _data_files(spark: SparkSession, paths: list[str]):
+    """Non-hidden data files under ``paths`` (recursive), lazily, as
+    Hadoop ``LocatedFileStatus`` objects — the one lister behind the
+    empty-dir skip, the pruning gate and the byte accounting, so the
+    hidden-name convention lives in one place."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    n = 0
     for p in paths:
         base = jvm.org.apache.hadoop.fs.Path(p)
         fs = base.getFileSystem(conf)
@@ -993,19 +878,16 @@ def _count_files_under(spark: SparkSession, paths: list[str], stop_at: int) -> i
             continue
         it = fs.listFiles(base, True)
         while it.hasNext():
-            name = it.next().getPath().getName()
-            if not name.startswith("_") and not name.startswith("."):
-                n += 1
-                if n >= stop_at:
-                    return n
-    return n
+            st = it.next()
+            if not st.getPath().getName().startswith(("_", ".")):
+                yield st
 
 
 def _has_data_files(spark: SparkSession, path: str) -> bool:
     """True if ``path`` holds at least one non-hidden file: a micro-batch
     whose survivors were all deduped publishes an EMPTY partitioned dir
     (no part files, so no inferable schema) which readers must skip."""
-    return _count_files_under(spark, [path], 1) >= 1
+    return next(_data_files(spark, [path]), None) is not None
 
 
 #: Below this many data files in the ``buckets/`` sub-tables the probe
@@ -1023,7 +905,8 @@ def _data_file_count(
     """Number of non-hidden data files across ``dirs``' ``sub`` tables,
     counting stops at ``stop_at`` (the pruning gate needs only the
     comparison, not an exact census of a huge index)."""
-    return _count_files_under(spark, [f"{d}/{sub}" for d in dirs], stop_at)
+    files = _data_files(spark, [f"{d}/{sub}" for d in dirs])
+    return sum(1 for _ in itertools.islice(files, stop_at))
 
 
 def _read_index_sub(
@@ -1048,58 +931,54 @@ def _read_index_sub(
     return out
 
 
-def _index_has_version_dirs(spark: SparkSession, index_dir: str) -> bool:
-    """Any conforming ``_b``/``_c`` dir present, committed or not."""
-    jvm, fs, base = _rollup_fs(spark, index_dir)
-    if not fs.exists(base):
-        return False
-    return any(
-        s.isDirectory() and _index_dir_entry(s.getPath().getName()) is not None
-        for s in fs.listStatus(base)
-    )
+#: The one on-disk index layout this engine writes and reads: sharded
+#: ``buckets/`` + ``hsh/`` sub-tables (see :data:`_IDX_BUCKETS`), tiered
+#: ``_m`` fold dirs, and a ``_META`` recording every key below.
+_INDEX_LAYOUT = 3
+#: ``_META`` keys that fix every stored byte: the shard count sets the
+#: directory partitioning, and the LSH shape sets every bucket hash and
+#: shingle-hash element.
+_INDEX_SHAPE_KEYS = ("n_shards", "k", "n_hashes", "bands", "hash_family")
 
 
-def _check_index_lsh_shape(index_dir: str, meta: dict, got: dict) -> None:
-    """Raise when the caller's LSH shape contradicts the index's
-    ``_META``.  k/n_hashes/bands/hash_family determine every stored
-    bucket hash and shingle-hash element: a mismatched maintainer or
-    probe would match NO buckets and silently re-admit (or clear) every
-    near-duplicate — the same silent-failure class the n_shards guard
-    exists for.  Keys absent from an older _META are skipped (unknown,
-    not wrong); ``None`` values in ``got`` mean "use the index's own"
-    and are resolved by the caller before this check."""
+def _check_index_shape(index_dir: str, meta: dict, got: dict) -> None:
+    """Raise when the caller's shape contradicts the index's ``_META``:
+    a mismatched maintainer or probe would match NO buckets (or prune to
+    the wrong shards) and silently re-admit, or clear, every
+    near-duplicate."""
     for key, val in got.items():
-        if key in meta and meta[key] != val:
+        if meta[key] != val:
             raise ValueError(
                 f"index at {index_dir} was built with {key}={meta[key]!r}; "
-                f"got {key}={val!r} — the LSH shape is a layout constant "
-                "(a mismatched probe matches no buckets and silently "
-                "misses every near-duplicate)"
+                f"got {key}={val!r} — {key} is a layout constant (a "
+                "mismatched probe matches no buckets or misses shards, and "
+                "silently misses every near-duplicate)"
             )
 
 
-def _require_v2_meta(spark: SparkSession, index_dir: str) -> dict:
-    """The index's ``_META``, or a hard error when version dirs exist
-    without one: a pre-v2 (flat survivor rows) or foreign index must
-    FAIL, not silently read as an empty retained corpus — re-admitting
-    every near-duplicate while dropping all prior survivors."""
+def _index_meta(spark: SparkSession, index_dir: str) -> dict | None:
+    """The index's ``_META``, or None for a fresh index (no ``_META``
+    and no version dir).  Anything else this engine did not write —
+    version dirs without ``_META`` (the flat pre-v2 layout, or a foreign
+    index), another layout, a ``_META`` missing a shape key — raises:
+    reading it as an empty or partial retained corpus would re-admit
+    every near-duplicate while dropping prior survivors."""
     meta = _read_index_meta(spark, index_dir)
     if meta is None:
-        raise ValueError(
-            f"near-dup index at {index_dir} has version dirs but no _META "
-            "— unrecognized layout (pre-v2 or foreign); rebuild the index "
-            "with maintain_near_dup_index or migrate it to the sharded "
-            "v2 layout"
-        )
-    if int(meta.get("layout", -1)) not in (2, 3):
-        # a FUTURE layout must fail loudly, not read partially: e.g. a
-        # reader unaware of layout 3's _m fold dirs would silently skip
-        # them — dropping folded survivors from the retained corpus
-        raise ValueError(
-            f"near-dup index at {index_dir} declares layout="
-            f"{meta.get('layout')!r}; this engine reads layouts 2-3"
-        )
-    return meta
+        if not _version_dirs(spark, index_dir, committed=False):
+            return None
+        problem = "has version dirs but no _META"
+    elif meta.get("layout") != _INDEX_LAYOUT:
+        problem = f"declares layout={meta.get('layout')!r}"
+    elif missing := [key for key in _INDEX_SHAPE_KEYS if key not in meta]:
+        problem = f"has a _META without {', '.join(missing)}"
+    else:
+        return meta
+    raise ValueError(
+        f"near-dup index at {index_dir} {problem} — unrecognized layout "
+        f"(this engine reads layout {_INDEX_LAYOUT} only); rebuild it with "
+        "maintain_near_dup_index"
+    )
 
 
 def _write_index_tables(
@@ -1109,7 +988,7 @@ def _write_index_tables(
     hsh_out: DataFrame,
     n_shards: int,
 ) -> None:
-    """Write the two sharded v2 sub-tables of one index version dir and
+    """Write the two sharded sub-tables of one index version dir and
     mark it ``_COMMITTED`` (shared by append publishes and tiered
     folds — a fold dir is byte-layout-identical to a batch dir)."""
     shard = F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
@@ -1135,33 +1014,6 @@ def _write_index_tables(
     _mark_committed(spark, new_dir)
 
 
-def _delete_index_dirs(spark: SparkSession, index_dir: str, names: list[str]) -> None:
-    """Best-effort recursive delete of index version dirs by name — the
-    single choke point for folded-history cleanup, so crash-injection
-    tests can fault it and prove readers/replay never depended on the
-    deletion having run."""
-    jvm, fs, _ = _rollup_fs(spark, index_dir)
-    for name in names:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{index_dir.rstrip('/')}/{name}"), True)
-
-
-def _advance_index_pointer(spark: SparkSession, index_dir: str, batch_id: int) -> None:
-    """Atomically advance ``_CURRENT`` to ``batch_id`` (write-temp +
-    rename; the sub-second pointer-missing window is covered by
-    :func:`_resolve_index_head`'s committed-dir fallback)."""
-    jvm, fs, _ = _rollup_fs(spark, index_dir)
-    ptr = jvm.org.apache.hadoop.fs.Path(index_dir, "_CURRENT")
-    tmp = jvm.org.apache.hadoop.fs.Path(index_dir, f"_CURRENT.{batch_id}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(str(batch_id).encode("utf-8"))
-    finally:
-        out.close()
-    if fs.exists(ptr):
-        fs.delete(ptr, False)
-    fs.rename(tmp, ptr)
-
-
 def _publish_index_batch(
     spark: SparkSession,
     index_dir: str,
@@ -1170,8 +1022,8 @@ def _publish_index_batch(
     batch_id: int,
     n_shards: int,
 ) -> None:
-    """Write one append dir (``_b<batch_id>``) in the sharded v2 layout,
-    mark it ``_COMMITTED``, then advance the ``_CURRENT`` pointer.
+    """Write one append dir (``_b<batch_id>``) in the sharded layout,
+    mark it ``_COMMITTED``, then publish ``batch_id`` as the head.
     Folding of accumulated history is a SEPARATE, pointer-independent
     step (:func:`_maybe_fold_index`) that runs after the pointer
     advance — a crash anywhere inside it never loses batch data."""
@@ -1179,28 +1031,15 @@ def _publish_index_batch(
     _write_index_tables(
         spark, f"{index_dir.rstrip('/')}/{name}", buckets_out, hsh_out, n_shards
     )
-    _advance_index_pointer(spark, index_dir, batch_id)
+    _publish_head(spark, index_dir, batch_id)
 
 
 def _bytes_under(spark: SparkSession, paths: list[str]) -> int:
-    """Total length of non-hidden data files under ``paths`` (recursive)
-    — fold-amplification accounting for the scale artifacts; only
-    called when a ``fold_log`` is requested, never on the hot path."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    total = 0
-    for p in paths:
-        base = jvm.org.apache.hadoop.fs.Path(p)
-        fs = base.getFileSystem(conf)
-        if not fs.exists(base):
-            continue
-        it = fs.listFiles(base, True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if not name.startswith("_") and not name.startswith("."):
-                total += st.getLen()
-    return total
+    """Total length of the data files under ``paths`` — fold-
+    amplification accounting for the scale artifacts; only called when
+    a ``fold_log`` or probe ``stats`` is requested, never on the hot
+    path."""
+    return sum(st.getLen() for st in _data_files(spark, paths))
 
 
 def _fold_tier_of(width: int, fanout: int) -> int:
@@ -1247,11 +1086,14 @@ def _plan_index_fold(
 
     The fanout window SLIDES within a run (ADVICE r11): testing
     max_width only against the oldest window would let one over-wide
-    legacy dir (e.g. an r10-era ``_c`` whose width is off tier
-    alignment) permanently block its whole tier from folding — dir
-    count, and with it listing/planning cost, would then grow without
-    bound.  Sliding picks the OLDEST window that fits max_width; the
-    over-wide head dir is left behind exactly as if sealed."""
+    dir permanently block its whole tier from folding — dir count, and
+    with it listing/planning cost, would then grow without bound.  Such
+    a dir appears when ``max_fold_width`` is lowered between runs: a
+    width-5 fold written under ``compact_every=5`` (width cap 25) is
+    tier 1 next to the width-4 folds of a later ``compact_every=4`` run,
+    whose cap is 16.  Sliding picks the OLDEST window that fits
+    max_width; the over-wide head dir is left behind exactly as if
+    sealed."""
     if fanout < 2:
         return None
     best: tuple[int, int, int] | None = None  # (tier, i, j)
@@ -1297,7 +1139,7 @@ def _cleanup_shadowed_index_dirs(
     entries, live = _index_entries(spark, index_dir, head)
     live_names = {name for _, _, name in live}
     shadowed = [name for _, _, name in entries if name not in live_names]
-    _delete_index_dirs(spark, index_dir, shadowed)
+    _delete_version_dirs(spark, index_dir, shadowed)
     return shadowed
 
 
@@ -1321,7 +1163,7 @@ def _maybe_fold_index(
     hot path skips)."""
     if fanout <= 0:
         return None
-    entries = _index_live_entries(spark, index_dir, head)
+    entries = _index_entries(spark, index_dir, head)[1]
     plan = _plan_index_fold(entries, fanout, max_width)
     if plan is None:
         return None
@@ -1342,7 +1184,7 @@ def _maybe_fold_index(
         # are written by the same kept_sigs frame, so one empty implies
         # both): publish a marker-only fold dir — readers skip it via
         # _has_data_files, and the empties still collapse to one dir
-        jvm, fs, _ = _rollup_fs(spark, index_dir)
+        jvm, fs, _ = _state_fs(spark, index_dir)
         fs.mkdirs(jvm.org.apache.hadoop.fs.Path(new_dir))
         _mark_committed(spark, new_dir)
     else:
@@ -1379,7 +1221,7 @@ def _probe_dup_ids(
     stats: dict | None = None,
 ) -> DataFrame:
     """Batch ids that near-duplicate a retained doc — the pruned history
-    probe of the v2 index layout.
+    probe of the sharded index layout.
 
     Scale shape (the 100 TB side is the index, the batch is small):
 
@@ -1614,16 +1456,15 @@ def maintain_near_dup_index(
     one-row-per-survivor contract).  Feed revisions under fresh ids (or
     exact-id-dedup upstream).
 
-    Exactly-once: the index is an append-only log of per-batch survivor
-    dirs (``_b<batch_id>``) behind a ``_CURRENT`` pointer; a replayed
-    batch (crash after publish, before checkpoint commit) is detected
-    by ``batch_id <= head`` and skipped, and readers only see dirs ≤
-    head, so a crash between data write and pointer advance leaves an
-    invisible (and then idempotently rewritten) dir.  Version dirs are
-    gated by the engine-owned ``_COMMITTED`` marker, never the job
-    committer's ``_SUCCESS`` (see :data:`_COMMIT_MARKER`).  Same
-    contract as :func:`maintain_daily_rollup`: index and checkpoint
-    move together.
+    Exactly-once: the index is an append-only log of committed
+    per-batch survivor dirs (``_b<batch_id>``) under the same
+    versioned-state protocol as the rollups (see the block above
+    :func:`_state_fs`): the batch id is published in ``_CURRENT`` after
+    the dir commits, a replayed batch (crash after publish, before the
+    checkpoint commit) has ``batch_id <= head`` and is skipped, and
+    readers see only committed dirs ≤ head.  Folds write committed
+    ``_m<lo>_<hi>`` dirs below the head and never move it.  Index and
+    checkpoint move together.
 
     Scale shape: the index side is sharded (see :data:`_IDX_BUCKETS`)
     so the per-batch probe PRUNES: it reads only the bucket shards the
@@ -1681,49 +1522,23 @@ def maintain_near_dup_index(
         )
     if max_fold_width is None:
         max_fold_width = int(compact_every) ** 2 if compact_every else 0
-    lsh_shape = {
+    shape = {
+        "n_shards": int(n_shards),
         "k": int(k),
         "n_hashes": int(n_hashes),
         "bands": int(bands),
         "hash_family": str(hash_family),
     }
-    meta = _read_index_meta(spark, index_dir)
+    meta = _index_meta(spark, index_dir)
     if meta is None:
-        if _index_has_version_dirs(spark, index_dir):
-            _require_v2_meta(spark, index_dir)  # raises: legacy/foreign
-        _write_index_meta(
-            spark,
-            index_dir,
-            # layout 3 = sharded sub-tables (v2) + tiered _m fold dirs
-            {"layout": 3, "n_shards": int(n_shards), **lsh_shape},
-        )
+        _write_index_meta(spark, index_dir, {"layout": _INDEX_LAYOUT, **shape})
     else:
-        _require_v2_meta(spark, index_dir)  # bounds the layout range
-        if int(meta.get("n_shards", -1)) != int(n_shards):
-            raise ValueError(
-                f"index at {index_dir} was built with n_shards="
-                f"{meta.get('n_shards')}; got n_shards={n_shards} — the shard "
-                "count is a layout constant (probe pruning would miss shards)"
-            )
-        _check_index_lsh_shape(index_dir, meta, lsh_shape)
-        # backfill: a pre-shape _META (r10-built index) validated
-        # vacuously above — stamp the shape THIS maintainer is now
-        # appending so every future maintainer/probe is guarded against
-        # the silent zero-match mismatch, and stamp layout 3 when this
-        # maintainer may write _m fold dirs (a layout-2-only reader
-        # must fail loudly rather than silently skip folds)
-        upgraded = {**meta, **lsh_shape}
-        if compact_every:
-            upgraded["layout"] = 3
-        if upgraded != meta:
-            _write_index_meta(spark, index_dir, upgraded)
+        _check_index_shape(index_dir, meta, shape)
         # opportunistic convergence of an interrupted fold cleanup: a
         # crash between a fold's commit and its folded dirs' deletion
         # leaves committed-but-shadowed dirs that readers already
         # ignore; reclaim them now instead of waiting for another fold
-        _cleanup_shadowed_index_dirs(
-            spark, index_dir, _resolve_index_head(spark, index_dir)
-        )
+        _cleanup_shadowed_index_dirs(spark, index_dir, _resolve_head(spark, index_dir))
 
     # schema sniff off the batch footer (readStream needs one up front)
     docs = (
@@ -1734,7 +1549,7 @@ def maintain_near_dup_index(
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark_l = batch_df.sparkSession
-        head = _resolve_index_head(spark_l, index_dir)
+        head = _resolve_head(spark_l, index_dir)
         if batch_id <= head:
             return  # at-least-once replay of an already-published batch
         # ONE signature computation per batch: shingles + minhash are
@@ -1749,7 +1564,10 @@ def maintain_near_dup_index(
         pins: list = []
         try:
             bkeys = _banded_keys(sigs, n_hashes, bands)
-            hist_dirs = _index_batch_dirs(spark_l, index_dir, head)
+            hist_dirs = [
+                f"{index_dir.rstrip('/')}/{name}"
+                for *_, name in _index_entries(spark_l, index_dir, head)[1]
+            ]
             pstats: dict | None = {} if probe_log is not None else None
             if hist_dirs:
                 dup_ids = _probe_dup_ids(
@@ -1837,6 +1655,17 @@ def maintain_near_dup_index(
     q.awaitTermination()
 
 
+def _published_index(
+    spark: SparkSession, index_dir: str
+) -> tuple[dict | None, list[str]]:
+    """``(_META, live dirs at the published head)`` for the read-only
+    paths; the ``_META`` is validated first (see :func:`_index_meta`),
+    so no dir of a layout this engine does not write is ever read."""
+    meta = _index_meta(spark, index_dir)
+    live = _index_entries(spark, index_dir, _resolve_head(spark, index_dir))[1]
+    return meta, [f"{index_dir.rstrip('/')}/{name}" for *_, name in live]
+
+
 def probe_near_dup_index(
     spark: SparkSession,
     index_dir: str,
@@ -1859,9 +1688,7 @@ def probe_near_dup_index(
     to the values the index was BUILT with, read from its ``_META``;
     passing them explicitly is validated against ``_META`` and a
     mismatch raises (a mismatched probe matches no buckets — it would
-    silently clear every document).  Only pre-shape indexes (older
-    ``_META`` without the LSH keys) fall back to the maintainer's
-    defaults.
+    silently clear every document).
 
     ``max_bucket`` defaults to ``None`` — NO hot-bucket cap.  Unlike
     the maintainer's ingest probe (where the cap is a documented
@@ -1881,33 +1708,20 @@ def probe_near_dup_index(
     re-lists).  See :func:`_cleanup_shadowed_index_dirs`."""
     from gmail_etl_spark.operators.dedup import _banded_keys, _lsh_sigs
 
-    head = _resolve_index_head(spark, index_dir)
-    dirs = _index_batch_dirs(spark, index_dir, head)
+    meta, dirs = _published_index(spark, index_dir)
     if not dirs:
-        if _index_has_version_dirs(spark, index_dir):
-            _require_v2_meta(spark, index_dir)  # raises on legacy layout
         return docs.select(F.col(id_col).alias("id")).limit(0)
-    meta = _require_v2_meta(spark, index_dir)
-    n_shards = int(meta["n_shards"])
     explicit = {
-        key: val
-        for key, val in (
-            ("k", k), ("n_hashes", n_hashes),
-            ("bands", bands), ("hash_family", hash_family),
-        )
-        if val is not None
+        "k": k, "n_hashes": n_hashes, "bands": bands, "hash_family": hash_family
     }
-    _check_index_lsh_shape(index_dir, meta, explicit)
-    # maintainer defaults only for pre-shape _META files
-    k = k if k is not None else int(meta.get("k", 3))
-    n_hashes = n_hashes if n_hashes is not None else int(meta.get("n_hashes", 16))
-    bands = bands if bands is not None else int(meta.get("bands", 8))
-    hash_family = (
-        hash_family if hash_family is not None
-        else str(meta.get("hash_family", "xxhash64"))
+    _check_index_shape(
+        index_dir, meta, {key: v for key, v in explicit.items() if v is not None}
     )
-    sigs = _lsh_sigs(docs, id_col, text_col, k, n_hashes, hash_family)
-    bkeys = _banded_keys(sigs, n_hashes, bands)
+    n_hashes = int(meta["n_hashes"])
+    sigs = _lsh_sigs(
+        docs, id_col, text_col, int(meta["k"]), n_hashes, str(meta["hash_family"])
+    )
+    bkeys = _banded_keys(sigs, n_hashes, int(meta["bands"]))
     pins: list = []
     try:
         out = _probe_dup_ids(
@@ -1917,7 +1731,7 @@ def probe_near_dup_index(
             sigs.select("id", "hsh"),
             threshold,
             max_bucket,
-            n_shards,
+            int(meta["n_shards"]),
             pins=pins,
         )
         if pins:
@@ -1934,15 +1748,11 @@ def probe_near_dup_index(
 def read_near_dup_index(spark: SparkSession, index_dir: str) -> DataFrame:
     """Current retained set: (id, buckets, hsh) of every survivor
     published by :func:`maintain_near_dup_index` — reassembled from the
-    sharded v2 layout (band keys regrouped per id, sorted for
+    sharded layout (band keys regrouped per id, sorted for
     determinism, joined to the shingle-hash sets)."""
-    head = _resolve_index_head(spark, index_dir)
-    dirs = _index_batch_dirs(spark, index_dir, head)
+    _, dirs = _published_index(spark, index_dir)
     if not dirs:
-        if _index_has_version_dirs(spark, index_dir):
-            _require_v2_meta(spark, index_dir)  # raises on legacy layout
         raise FileNotFoundError(f"no near-dup index published under {index_dir}")
-    _require_v2_meta(spark, index_dir)
     all_buckets = _read_index_sub(spark, dirs, _IDX_BUCKETS)
     all_hsh = _read_index_sub(spark, dirs, _IDX_HSH)
     if all_buckets is None or all_hsh is None:

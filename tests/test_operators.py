@@ -2211,7 +2211,7 @@ def test_verify_stage_single_intersect_plan(spark):
     condition and the non-cheap intersect is cloned — the committed r12
     plan paid up to 4 evaluations per verified pair (see
     plans/r12/near_dedup_pairs_subplan_after.txt:140-143 and
-    tools/exp_verify_r13.py for the 8-core A/B: med 0.871 -> 0.541 s)."""
+    OPTIMIZATION_r13.md section 1 for the 8-core A/B: med 0.871 -> 0.541 s)."""
     from gmail_etl_spark.operators.dedup import jaccard_pairs_prefix
 
     d = _docs(spark, 80).select("doc_id", "text")

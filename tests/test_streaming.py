@@ -710,8 +710,8 @@ def test_streaming_near_dup_index_tiered_fold(spark, tmp_path):
     import pandas as pd
 
     from gmail_etl_spark.streaming.jobs import (
-        _index_batch_dirs,
-        _resolve_index_head,
+        _index_entries,
+        _resolve_head,
         maintain_near_dup_index,
         read_near_dup_index,
     )
@@ -738,17 +738,17 @@ def test_streaming_near_dup_index_tiered_fold(spark, tmp_path):
     got = {r["id"] for r in read_near_dup_index(spark, index).collect()}
     assert got == expected
 
-    head = _resolve_index_head(spark, index)
-    live = _index_batch_dirs(spark, index, head)
+    head = _resolve_head(spark, index)
+    live = [name for *_, name in _index_entries(spark, index, head)[1]]
     # fanout=2 over 6 batches: b0+b1->_m0_1, b2+b3->_m2_3,
     # _m0_1+_m2_3->_m0_3 (tier cascade), b4+b5->_m4_5
-    assert [d.rsplit("/", 1)[1] for d in live] == [
+    assert live == [
         "_m000000000000000_000000000000003",
         "_m000000000000004_000000000000005",
     ], live
     # shadowed dirs physically removed (cleanup ran to completion)
     all_dirs = [p.name for p in (tmp_path / "ndindex").iterdir() if p.is_dir()]
-    assert sorted(all_dirs) == sorted(d.rsplit("/", 1)[1] for d in live)
+    assert sorted(all_dirs) == sorted(live)
 
     # fold accounting: one entry per batch, 4 folds, each fold's input
     # bounded by its tier — max_fold_width=4 (auto fanout**2) means no
@@ -803,17 +803,19 @@ def test_index_fold_planner_pure():
 
 
 def test_index_fold_planner_slides_past_overwide_head():
-    """ADVICE r11: an off-tier-alignment legacy dir at a run's head
-    whose fanout-window exceeds max_width must not block the tier
-    forever — the window slides to the oldest fitting position, leaving
-    the over-wide head behind as if sealed."""
+    """ADVICE r11: a dir at a run's head whose fanout-window exceeds
+    max_width must not block the tier forever — the window slides to
+    the oldest fitting position, leaving the over-wide head behind as if
+    sealed."""
     from gmail_etl_spark.streaming.jobs import _plan_index_fold
 
-    # fanout=4, max_width=16: a legacy width-5 dir (tier 1, same tier
-    # as width-4 dirs) heads a run of four width-4 dirs.  Oldest window
-    # [0,4): width 5+4*3 = 21 > 16 — the pre-fix planner returned None
-    # here permanently; the slide picks [1,5): width 16 <= 16.
-    run = [(0, 4, "_c000000000000004")] + [
+    # fanout=4, max_width=16: a width-5 fold dir (tier 1, same tier as
+    # width-4 dirs) heads a run of four width-4 dirs.  It was folded by
+    # an earlier run with compact_every=5, whose max_fold_width was 25;
+    # this run lowered the cap to 16.  Oldest window [0,4): width
+    # 5+4*3 = 21 > 16 — the pre-fix planner returned None here
+    # permanently; the slide picks [1,5): width 16 <= 16.
+    run = [(0, 4, "_m000000000000000_000000000000004")] + [
         (5 + 4 * i, 8 + 4 * i, f"_m{5 + 4 * i:015d}_{8 + 4 * i:015d}")
         for i in range(4)
     ]
@@ -830,17 +832,16 @@ def test_index_fold_planner_slides_past_overwide_head():
 def test_live_of_equal_interval_tie_break():
     """ADVICE r11: _live_of is TOTAL — two committed dirs with the same
     interval never both read as live (doubled rows); the
-    lexicographically greatest name wins, so _m beats _b/_c."""
+    lexicographically greatest name wins, so _m beats _b."""
     from gmail_etl_spark.streaming.jobs import _live_of
 
     b = (3, 3, "_b000000000000003")
     m = (3, 3, "_m000000000000003_000000000000003")
     assert _live_of([b, m]) == [m]
     assert _live_of([m, b]) == [m]  # order-independent
-    c = (0, 3, "_c000000000000003")
     m2 = (0, 3, "_m000000000000000_000000000000003")
-    # equal-interval _m beats _c, and the winner still shadows members
-    assert _live_of([c, m2, b, m]) == [m2]
+    # a wider fold shadows both members of the equal-interval pair
+    assert _live_of([m2, b, m]) == [m2]
     # strict containment unchanged: distinct intervals keep both
     assert _live_of([(0, 1, "_m0_1"), (2, 2, "_b2")]) == [
         (0, 1, "_m0_1"),
@@ -883,9 +884,9 @@ def test_write_mtime_ordered_batches(spark, tmp_path):
 
 def test_index_fold_algebra_properties():
     """Property test over the fold/shadow algebra with the PRODUCTION
-    predicates (_plan_index_fold + _live_of + _index_dir_entry): for
-    any publish count, fanout, width cap, optional legacy ``_c`` seed,
-    and any pattern of crash-interrupted cleanups, after every publish
+    predicates (_plan_index_fold + _live_of + _dir_interval): for any
+    publish count, fanout, width cap, and any pattern of
+    crash-interrupted cleanups, after every publish
 
     - the live dirs' intervals are disjoint and tile [0..head] exactly
       (no batch lost, none double-counted — the invariant q259's
@@ -900,7 +901,7 @@ def test_index_fold_algebra_properties():
     from hypothesis import strategies as st
 
     from gmail_etl_spark.streaming.jobs import (
-        _index_dir_entry,
+        _dir_interval,
         _live_of,
         _plan_index_fold,
     )
@@ -910,18 +911,12 @@ def test_index_fold_algebra_properties():
         n_batches=st.integers(2, 60),
         fanout=st.integers(2, 5),
         max_width=st.integers(2, 40),
-        legacy_seed=st.integers(0, 6),  # 0 = none, else _c covering [0, s-1]
         cleanups=st.lists(st.booleans(), min_size=60, max_size=60),
     )
-    def run(n_batches, fanout, max_width, legacy_seed, cleanups):
+    def run(n_batches, fanout, max_width, cleanups):
         # model the fs as name -> interval (re-publish overwrites)
         disk: dict[str, tuple[int, int]] = {}
-        first_b = 0
-        if legacy_seed:
-            s = legacy_seed - 1
-            disk[f"_c{s:015d}"] = (0, s)
-            first_b = legacy_seed
-        for b in range(first_b, first_b + n_batches):
+        for b in range(n_batches):
             disk[f"_b{b:015d}"] = (b, b)
             head = b
             entries = [(lo, hi, n) for n, (lo, hi) in disk.items()]
@@ -940,9 +935,9 @@ def test_index_fold_algebra_properties():
                 # never collide with a live dir (overwriting one would
                 # race readers); shadowed leftovers may be rewritten
                 assert name not in {n for _, _, n in live}, name
-                assert _index_dir_entry(name) == (lo, hi)
+                assert _dir_interval(name) == (lo, hi)
                 disk[name] = (lo, hi)
-                if cleanups[b - first_b]:  # cleanup ran (no crash)
+                if cleanups[b]:  # cleanup ran (no crash)
                     entries = [(l, h, n) for n, (l, h) in disk.items()]
                     keep = {n for _, _, n in _live_of(entries)}
                     disk = {n: iv for n, iv in disk.items() if n in keep}
@@ -959,10 +954,9 @@ def test_index_fold_algebra_properties():
 
 
 def test_index_interval_reader_legacy_and_partial_dirs(spark, tmp_path):
-    """The interval containment rule reproduces the legacy layouts
-    exactly: a pre-tiered ``_c<seq>`` full-compaction dir (covers
-    [0, seq]) shadows every older dir — including a ``_b`` survivor of
-    an interrupted cleanup — and an UNCOMMITTED fold dir is invisible
+    """The interval containment rule on disk: a committed fold dir
+    shadows every dir inside its interval — including a ``_b`` survivor
+    of an interrupted cleanup — and an UNCOMMITTED fold dir is invisible
     even though its interval sits at or below head."""
     import gmail_etl_spark.streaming.jobs as J
 
@@ -974,24 +968,28 @@ def test_index_interval_reader_legacy_and_partial_dirs(spark, tmp_path):
         if committed:
             (d / "_COMMITTED").touch()
 
+    def live():
+        return [n for _, _, n in J._index_entries(spark, str(index), 3)[1]]
+
     mkdir("_b000000000000000")  # interrupted-cleanup survivor
-    mkdir("_c000000000000001")  # legacy full compaction at batch 1
+    mkdir("_m000000000000000_000000000000001")  # its committed fold
     mkdir("_b000000000000002")
     mkdir("_b000000000000003")
     # partial fold (crash mid-write): interval <= head but NO marker
     mkdir("_m000000000000002_000000000000003", committed=False)
 
-    live = [n for _, _, n in J._index_live_entries(spark, str(index), 3)]
-    assert live == [
-        "_c000000000000001", "_b000000000000002", "_b000000000000003",
-    ], live
+    assert live() == [
+        "_m000000000000000_000000000000001",
+        "_b000000000000002",
+        "_b000000000000003",
+    ], live()
 
     # once the fold commits, it shadows its members
     (index / "_m000000000000002_000000000000003" / "_COMMITTED").touch()
-    live = [n for _, _, n in J._index_live_entries(spark, str(index), 3)]
-    assert live == [
-        "_c000000000000001", "_m000000000000002_000000000000003",
-    ], live
+    assert live() == [
+        "_m000000000000000_000000000000001",
+        "_m000000000000002_000000000000003",
+    ], live()
     # and the opportunistic cleanup reclaims exactly the shadowed dirs
     cleaned = J._cleanup_shadowed_index_dirs(spark, str(index), 3)
     assert sorted(cleaned) == [
@@ -999,7 +997,8 @@ def test_index_interval_reader_legacy_and_partial_dirs(spark, tmp_path):
     ], cleaned
     left = sorted(p.name for p in index.iterdir() if p.is_dir())
     assert left == [
-        "_c000000000000001", "_m000000000000002_000000000000003",
+        "_m000000000000000_000000000000001",
+        "_m000000000000002_000000000000003",
     ], left
 
 
@@ -1036,7 +1035,7 @@ def test_index_fold_crash_windows(spark, tmp_path, monkeypatch):
         if names:
             raise boom
 
-    monkeypatch.setattr(J, "_delete_index_dirs", dying_delete)
+    monkeypatch.setattr(J, "_delete_version_dirs", dying_delete)
     with pytest.raises(Exception, match="injected: cleanup crash"):
         J.maintain_near_dup_index(
             spark, str(src), str(index), str(tmp_path / "ckpt"), compact_every=2
@@ -1058,7 +1057,7 @@ def test_index_fold_crash_windows(spark, tmp_path, monkeypatch):
     )
     assert {r["id"] for r in J.read_near_dup_index(spark, str(index)).collect()} == expected
     names = sorted(p.name for p in index.iterdir() if p.is_dir())
-    intervals = [J._index_dir_entry(n) for n in names]
+    intervals = [J._dir_interval(n) for n in names]
     # converged: no dir's interval is contained in another's
     assert not any(
         a != b and b[0] <= a[0] and a[1] <= b[1] for a in intervals for b in intervals
@@ -1068,10 +1067,10 @@ def test_index_fold_crash_windows(spark, tmp_path, monkeypatch):
     # advance — fresh index, first batch only
     index2 = tmp_path / "ndindex2"
 
-    def dying_advance(spark_arg, index_dir, batch_id):
+    def dying_publish(spark_arg, state_dir, batch_id):
         raise RuntimeError("injected: pointer crash")
 
-    monkeypatch.setattr(J, "_advance_index_pointer", dying_advance)
+    monkeypatch.setattr(J, "_publish_head", dying_publish)
     with pytest.raises(Exception, match="injected: pointer crash"):
         J.maintain_near_dup_index(
             spark, str(src), str(index2), str(tmp_path / "ckpt2"), compact_every=2
@@ -1079,7 +1078,7 @@ def test_index_fold_crash_windows(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     # no pointer, but the committed _b dir resolves via the fallback
     assert not (index2 / "_CURRENT").exists()
-    assert J._resolve_index_head(spark, str(index2)) == 0
+    assert J._resolve_head(spark, str(index2)) == 0
     # replay with the same checkpoint: batch 0 is skipped (already
     # committed), the rest stream normally, no duplicate rows
     J.maintain_near_dup_index(
@@ -1136,7 +1135,7 @@ def test_index_fold_boundary_streaming_restart(spark, tmp_path, monkeypatch):
     # checkpoint's committed batches
     names = sorted(p.name for p in index.iterdir() if p.is_dir())
     assert any(n.startswith("_m") for n in names), names
-    head_at_crash = J._resolve_index_head(spark, str(index))
+    head_at_crash = J._resolve_head(spark, str(index))
     assert head_at_crash >= 1
 
     # restart with the SAME checkpoint: the replayed batch is skipped
@@ -1147,8 +1146,8 @@ def test_index_fold_boundary_streaming_restart(spark, tmp_path, monkeypatch):
     out = [r["id"] for r in J.read_near_dup_index(spark, str(index)).collect()]
     assert sorted(out) == sorted(expected)  # set-equal AND no dup rows
     # layout converged: live intervals tile [0..head] disjointly
-    head = J._resolve_index_head(spark, str(index))
-    live = J._index_live_entries(spark, str(index), head)
+    head = J._resolve_head(spark, str(index))
+    live = J._index_entries(spark, str(index), head)[1]
     tiles = sorted(x for lo, hi, _ in live for x in range(lo, hi + 1))
     assert tiles == list(range(head + 1)), live
 
@@ -1187,7 +1186,10 @@ def test_index_meta_lsh_shape_guard(spark, tmp_path):
     )
 
     # mismatched maintainer: every shape key raises
-    for kwargs in ({"k": 3}, {"n_hashes": 8}, {"bands": 8}, {"hash_family": "xxhash64"}):
+    for kwargs in (
+        {"k": 3}, {"n_hashes": 8}, {"bands": 8}, {"hash_family": "xxhash64"},
+        {"n_shards": 8},
+    ):
         full = dict(k=1, n_hashes=16, bands=16, hash_family="sha256")
         full.update(kwargs)
         with pytest.raises(ValueError, match="layout constant"):
@@ -1212,24 +1214,18 @@ def test_index_meta_lsh_shape_guard(spark, tmp_path):
             compact_every=1,
         )
 
-    # pre-shape _META (r10-built index): the next maintainer BACKFILLS
-    # the shape it is now appending (and the layout-3 stamp), so the
-    # guard is permanent, not vacuous-forever
+    # a _META missing a shape key cannot guard the shape, so the index
+    # is refused by the maintainer and the probe alike
     from gmail_etl_spark.streaming.jobs import _write_index_meta
 
-    _write_index_meta(spark, index, {"layout": 2, "n_shards": 16})
-    maintain_near_dup_index(
-        spark, str(src), index, str(tmp_path / "ckpt2"),
-        k=1, n_hashes=16, bands=16, hash_family="sha256",
-    )
-    meta2 = _read_index_meta(spark, index)
-    assert meta2["layout"] == 3
-    assert (meta2["k"], meta2["n_hashes"], meta2["bands"], meta2["hash_family"]) == (
-        1, 16, 16, "sha256",
-    )
-    # and the backfilled shape now binds
-    with pytest.raises(ValueError, match="layout constant"):
-        probe_near_dup_index(spark, index, probe_docs, bands=8)
+    _write_index_meta(spark, index, {"layout": 3, "n_shards": 16, "k": 1})
+    with pytest.raises(ValueError, match="without n_hashes, bands, hash_family"):
+        maintain_near_dup_index(
+            spark, str(src), index, str(tmp_path / "ckpt2"),
+            k=1, n_hashes=16, bands=16, hash_family="sha256",
+        )
+    with pytest.raises(ValueError, match="unrecognized layout"):
+        probe_near_dup_index(spark, index, probe_docs)
 
 
 def test_near_dup_index_stray_dirs_and_marker_fallback(spark, tmp_path):
@@ -1240,7 +1236,7 @@ def test_near_dup_index_stray_dirs_and_marker_fallback(spark, tmp_path):
     import pandas as pd
 
     from gmail_etl_spark.streaming.jobs import (
-        _resolve_index_head,
+        _resolve_head,
         maintain_near_dup_index,
         read_near_dup_index,
     )
@@ -1264,15 +1260,22 @@ def test_near_dup_index_stray_dirs_and_marker_fallback(spark, tmp_path):
     (index / "_cjunk").mkdir()
     assert {r["id"] for r in read_near_dup_index(spark, str(index)).collect()} == expected
 
-    head_before = _resolve_index_head(spark, str(index))
+    head_before = _resolve_head(spark, str(index))
     # partial (uncommitted) dir with a higher id than the real head
     partial = index / "_b000000000000099"
     partial.mkdir()
     # pointer gone -> fallback must pick the highest COMMITTED dir,
     # ignoring the marker-less partial
     (index / "_CURRENT").unlink()
-    assert _resolve_index_head(spark, str(index)) == head_before
+    assert _resolve_head(spark, str(index)) == head_before
     assert {r["id"] for r in read_near_dup_index(spark, str(index)).collect()} == expected
+
+
+#: The ``_META`` that maintain_near_dup_index writes at its default shape.
+_LAYOUT3_META = {
+    "layout": 3, "n_shards": 16, "k": 3, "n_hashes": 16, "bands": 8,
+    "hash_family": "xxhash64",
+}
 
 
 def test_probe_dup_ids_hot_bucket_cap_and_prune_equality(spark, tmp_path):
@@ -1295,9 +1298,9 @@ def test_probe_dup_ids_hot_bucket_cap_and_prune_equality(spark, tmp_path):
         + [Row(id=9000, hsh=[1, 2, 3, 4])]
     )
     index = str(tmp_path / "handindex")
-    J._write_index_meta(spark, index, {"layout": 2, "n_shards": 16})
+    J._write_index_meta(spark, index, _LAYOUT3_META)
     J._publish_index_batch(spark, index, buckets_df, hsh_df, 0, n_shards=16)
-    dirs = J._index_batch_dirs(spark, index, J._resolve_index_head(spark, index))
+    dirs = J._published_index(spark, index)[1]
     assert len(dirs) == 1
 
     # probe batch: doc 1 collides ONLY with the hot bucket (true near-dup
@@ -1353,9 +1356,9 @@ def test_probe_dup_ids_stats_and_uncapped_warning(
         + [Row(id=9000, hsh=[1, 2, 3, 4])]
     )
     index = str(tmp_path / "handindex")
-    J._write_index_meta(spark, index, {"layout": 2, "n_shards": 16})
+    J._write_index_meta(spark, index, _LAYOUT3_META)
     J._publish_index_batch(spark, index, buckets_df, hsh_df, 0, n_shards=16)
-    dirs = J._index_batch_dirs(spark, index, J._resolve_index_head(spark, index))
+    dirs = J._published_index(spark, index)[1]
 
     bkeys = spark.createDataFrame([Row(id=1, bucket=77), Row(id=2, bucket=12)])
     b_hsh = spark.createDataFrame(
@@ -1428,16 +1431,13 @@ def test_probe_near_dup_index_public_api(spark, tmp_path):
 
 
 def test_rollup_commit_marker_fallback(spark, tmp_path):
-    """The rollup pointer-missing fallback trusts a version dir with
-    EITHER completion marker — the engine-owned ``_COMMITTED``
-    (committer-conf independent) or the job committer's ``_SUCCESS``
-    (a fully-written dir from a pre-marker version of the code must
-    stay recoverable after upgrade) — and ignores a partial dir with
-    NEITHER."""
+    """The rollup pointer-missing fallback trusts the version dir that
+    carries the engine-owned ``_COMMITTED`` marker (committer-conf
+    independent) and ignores a partial dir without it."""
     import pandas as pd
 
     from gmail_etl_spark.streaming.jobs import (
-        _resolve_rollup_version,
+        _resolve_head,
         maintain_daily_rollup,
         read_daily_rollup,
     )
@@ -1456,67 +1456,46 @@ def test_rollup_commit_marker_fallback(spark, tmp_path):
     ).to_parquet(src / "0.parquet")
     rollup = tmp_path / "rollup"
     maintain_daily_rollup(spark, str(src), str(rollup), str(tmp_path / "ckpt"))
-    data_dir, batch_id = _resolve_rollup_version(spark, str(rollup))
+    batch_id = _resolve_head(spark, str(rollup))
     assert batch_id >= 0
+    assert (rollup / "_CURRENT").read_text() == str(batch_id)
     truth = sorted(
         (r["event_type"], r["n_events"], r["value_cents"])
         for r in read_daily_rollup(spark, str(rollup)).collect()
     )
 
-    # partial higher version: dir exists but carries NEITHER marker ->
+    # partial higher version: dir exists but carries no marker ->
     # must NOT be trusted by the fallback
     partial = rollup / "_v000000000000099"
     partial.mkdir()
     (rollup / "_CURRENT").unlink()
-    data_dir2, batch_id2 = _resolve_rollup_version(spark, str(rollup))
-    assert (data_dir2, batch_id2) == (data_dir, batch_id)
+    assert _resolve_head(spark, str(rollup)) == batch_id
     assert sorted(
         (r["event_type"], r["n_events"], r["value_cents"])
         for r in read_daily_rollup(spark, str(rollup)).collect()
     ) == truth
     # stray non-numeric version dir is skipped, not parsed
     (rollup / "_vjunk").mkdir()
-    assert _resolve_rollup_version(spark, str(rollup))[1] == batch_id
-
-    # legacy compat: the real version dir written by the parquet job
-    # carries its own _SUCCESS; with the ENGINE marker stripped (a dir
-    # written before _COMMITTED existed) the fallback must STILL
-    # resolve it — ignoring it would rebuild state from one replayed
-    # batch and delete real history
-    version_name = data_dir.rsplit("/", 1)[1]
-    committed = rollup / version_name / "_COMMITTED"
-    assert committed.exists() and (rollup / version_name / "_SUCCESS").exists()
-    committed.unlink()
-    assert _resolve_rollup_version(spark, str(rollup))[1] == batch_id
-    assert sorted(
-        (r["event_type"], r["n_events"], r["value_cents"])
-        for r in read_daily_rollup(spark, str(rollup)).collect()
-    ) == truth
+    assert _resolve_head(spark, str(rollup)) == batch_id
 
 
 def test_near_dup_index_legacy_layout_raises(spark, tmp_path):
-    """A pre-v2 (flat survivor rows, no _META) or foreign index must
-    FAIL LOUDLY: silently reading it as an empty retained corpus would
-    re-admit every near-duplicate while dropping all prior survivors."""
+    """An index in a layout this engine does not write must FAIL
+    LOUDLY, from the reader, the probe and the maintainer alike: the
+    flat pre-v2 shape (no _META) and a layout-2 index (sharded, no fold
+    dirs).  Silently reading either as an empty or partial retained
+    corpus would re-admit every near-duplicate while dropping prior
+    survivors."""
     import pandas as pd
     import pytest
 
     from gmail_etl_spark.streaming.jobs import (
+        _read_index_meta,
+        _write_index_meta,
         maintain_near_dup_index,
         probe_near_dup_index,
         read_near_dup_index,
     )
-
-    # fabricate the v1 shape: one _b dir of flat parquet + job marker +
-    # a _CURRENT pointer, and NO _META
-    index = tmp_path / "legacy"
-    bdir = index / "_b000000000000000"
-    bdir.mkdir(parents=True)
-    pd.DataFrame({"id": [1], "buckets": [[7]], "hsh": [[11, 12]]}).to_parquet(
-        bdir / "part-0.parquet"
-    )
-    (bdir / "_SUCCESS").touch()
-    (index / "_CURRENT").write_text("0")
 
     docs = tmp_path / "docs"
     docs.mkdir()
@@ -1524,11 +1503,30 @@ def test_near_dup_index_legacy_layout_raises(spark, tmp_path):
         docs / "0.parquet"
     )
 
-    with pytest.raises(ValueError, match="unrecognized layout"):
-        read_near_dup_index(spark, str(index))
-    with pytest.raises(ValueError, match="unrecognized layout"):
-        probe_near_dup_index(spark, str(index), spark.read.parquet(str(docs)))
-    with pytest.raises(ValueError, match="unrecognized layout"):
-        maintain_near_dup_index(
-            spark, str(docs), str(index), str(tmp_path / "ckpt")
-        )
+    # the v1 shape: one _b dir of flat parquet + job marker + a
+    # _CURRENT pointer, and NO _META
+    flat = tmp_path / "flat"
+    bdir = flat / "_b000000000000000"
+    bdir.mkdir(parents=True)
+    pd.DataFrame({"id": [1], "buckets": [[7]], "hsh": [[11, 12]]}).to_parquet(
+        bdir / "part-0.parquet"
+    )
+    (bdir / "_SUCCESS").touch()
+    (flat / "_CURRENT").write_text("0")
+
+    # layout 2: an index the engine built, with its _META stamped back
+    # to the layout before tiered fold dirs
+    layout2 = str(tmp_path / "layout2")
+    maintain_near_dup_index(spark, str(docs), layout2, str(tmp_path / "ckpt0"))
+    meta = _read_index_meta(spark, layout2)
+    _write_index_meta(spark, layout2, {**meta, "layout": 2})
+
+    for i, index in enumerate((str(flat), layout2)):
+        with pytest.raises(ValueError, match="unrecognized layout"):
+            read_near_dup_index(spark, index)
+        with pytest.raises(ValueError, match="unrecognized layout"):
+            probe_near_dup_index(spark, index, spark.read.parquet(str(docs)))
+        with pytest.raises(ValueError, match="unrecognized layout"):
+            maintain_near_dup_index(
+                spark, str(docs), index, str(tmp_path / f"ckpt{i + 1}")
+            )

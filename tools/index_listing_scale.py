@@ -100,7 +100,7 @@ def main() -> None:
                 args.n_shards,
             )
             n_dirs += 1
-            J._advance_index_pointer(spark, index, hi)
+            J._publish_head(spark, index, hi)
         head = n_dirs * max_width - 1
 
         listing_ms, plan_ms, probe_walls = [], [], []

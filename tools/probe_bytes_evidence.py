@@ -103,8 +103,7 @@ def main() -> None:
         k=3, n_hashes=16, bands=bands, threshold=0.5,
         n_shards=args.n_shards,
     )
-    head = J._resolve_index_head(spark, index)
-    dirs = J._index_batch_dirs(spark, index, head)
+    dirs = J._published_index(spark, index)[1]
 
     # index-scale probe batch: half byte-exact copies of planted heads
     # (must all flag), half novel (disjoint token namespace, none flag)

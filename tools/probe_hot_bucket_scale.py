@@ -75,11 +75,17 @@ def main() -> None:
 
     work = tempfile.mkdtemp(prefix="probe_hot_")
     index = os.path.join(work, "index")
-    J._write_index_meta(spark, index, {"layout": 2, "n_shards": args.n_shards})
+    # the engine's layout-3 _META at the maintainer's default LSH shape
+    # (the hand-built buckets above never go through a signature)
+    J._write_index_meta(
+        spark, index,
+        {"layout": 3, "n_shards": args.n_shards, "k": 3, "n_hashes": 16,
+         "bands": 8, "hash_family": "xxhash64"},
+    )
     J._publish_index_batch(
         spark, index, idx_buckets, idx_hsh, 0, n_shards=args.n_shards
     )
-    dirs = J._index_batch_dirs(spark, index, J._resolve_index_head(spark, index))
+    dirs = J._published_index(spark, index)[1]
     assert len(dirs) == 1
 
     # probe batch: ids [10M, 10M + batch_n); EVERY batch doc carries the

@@ -84,6 +84,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     import gmail_etl_spark.streaming.jobs as J
+    from gmail_etl_spark.operators.dedup import _banded_keys, _lsh_sigs
     from gmail_etl_spark.session import get_spark
     from gmail_etl_spark.synthetic import planted_near_dup_corpus
 
@@ -116,8 +117,7 @@ def main() -> None:
     )
 
     buckets_total = count_files(index)  # all data files (both sub-tables)
-    head = J._resolve_index_head(spark, index)
-    dirs = J._index_batch_dirs(spark, index, head)
+    dirs = J._published_index(spark, index)[1]
     b_total = sum(count_files(f"{d}/{J._IDX_BUCKETS}") for d in dirs)
     h_total = sum(count_files(f"{d}/{J._IDX_HSH}") for d in dirs)
     gate_files = J._data_file_count(spark, dirs, J._IDX_BUCKETS, J._PRUNE_MIN_FILES)
@@ -132,12 +132,15 @@ def main() -> None:
         [(10_000_000, pdf.iloc[1]["text"])], "doc_id long, text string"
     )
 
+    # probe_near_dup_index checkpoints its result, which leaves no scan
+    # in the returned plan: read the plan of the pruned probe it wraps
+    sigs = _lsh_sigs(probe_docs, "doc_id", "text", 3, 16, "xxhash64")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         t0 = time.perf_counter()
-        probed = J.probe_near_dup_index(
-            spark, index, probe_docs, k=3, n_hashes=16, bands=bands,
-            threshold=0.5,
+        probed = J._probe_dup_ids(
+            spark, dirs, _banded_keys(sigs, 16, bands), sigs.select("id", "hsh"),
+            0.5, None, args.n_shards,
         )
         dup_ids = sorted(r["id"] for r in probed.collect())
         wall = round(time.perf_counter() - t0, 2)

@@ -70,13 +70,11 @@ def main() -> None:
     results = []
     for spec in args.index:
         label, path = spec.split("=", 1)
-        meta = J._require_v2_meta(spark, path)
+        meta, dirs = J._published_index(spark, path)
         n_shards = int(meta["n_shards"])
         k, n_hashes, bands = (
             int(meta["k"]), int(meta["n_hashes"]), int(meta["bands"])
         )
-        head = J._resolve_index_head(spark, path)
-        dirs = J._index_batch_dirs(spark, path, head)
         index_bucket_bytes = J._bytes_under(
             spark, [f"{d.rstrip('/')}/{J._IDX_BUCKETS}" for d in dirs]
         )

@@ -298,9 +298,7 @@ def main() -> None:
         "trickle_retained_exact": trickle_exact,
         "docs_per_sec": round(n / wall, 1),
         "index_bytes": index_bytes,
-        "live_dirs_final": len(
-            J._index_batch_dirs(spark, index, J._resolve_index_head(spark, index))
-        ),
+        "live_dirs_final": len(J._published_index(spark, index)[1]),
         "loadavg": list(os.getloadavg()),
     }
     line = json.dumps(result)

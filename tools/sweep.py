@@ -46,6 +46,8 @@ import sys
 import tempfile
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -126,8 +128,7 @@ def _run_child(sf: str, names: list[str]) -> dict[str, dict]:
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__),
              "--sf", sf, "--json", out_path, "--recycle", "0", *names],
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            env={**os.environ, "PYTHONPATH": "."},
+            cwd=ROOT,
             stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
         )
         try:
@@ -165,6 +166,12 @@ def main() -> int:
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
+    # the package must import here AND in the Python workers, which fork
+    # from gmail_etl_spark.worker_daemon with the inherited environment
+    sys.path.insert(0, ROOT)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     _apply_smoke_knobs(args.sf)
 
     if args.recycle:
