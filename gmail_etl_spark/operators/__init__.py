@@ -2,7 +2,6 @@ from gmail_etl_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
     minhash_lsh_pairs,
-    simhash_signatures,
 )
 from gmail_etl_spark.operators.similarity import cosine, cosine_topk
 
@@ -10,7 +9,6 @@ __all__ = [
     "exact_dedup",
     "jaccard_pairs",
     "minhash_lsh_pairs",
-    "simhash_signatures",
     "cosine",
     "cosine_topk",
 ]

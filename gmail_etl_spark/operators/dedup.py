@@ -373,6 +373,15 @@ def lsh_params_for_recall(
     return best
 
 
+def _check_hash_family(hash_family: str) -> None:
+    """Reject a ``hash_family`` the LSH kernels do not implement (a typo
+    would otherwise hash with xxhash64 under the misspelled name)."""
+    if hash_family not in ("xxhash64", "sha256"):
+        raise ValueError(
+            f"hash_family must be 'xxhash64' or 'sha256', got {hash_family!r}"
+        )
+
+
 def _lsh_sigs(
     df: DataFrame,
     id_col: str,
@@ -413,6 +422,7 @@ def _lsh_sigs(
     signature consumes base only through per-permutation minima, which
     are invariant under dropping duplicate values.
     """
+    _check_hash_family(hash_family)
     if hash_family == "sha256":
         hsh = "array_distinct(transform(shingles, s -> substring(sha2(s, 256), 1, 16)))"
         # first 8 hex chars of sha256 are a prefix of the 16 stored in
@@ -956,39 +966,14 @@ def jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash per document: each distinct token votes ±1 on every
-    bit of its xxhash64; the signature sign-thresholds the vote sums.
-    Near-dups differ in few bits (hamming distance on one BIGINT)."""
-    toks = F.array_distinct(_tokens(F.col(text_col)))
-
-    def _vote(b: int):
-        # closure factory: PySpark HOF lambdas must take exactly the
-        # declared arity (a defaulted 3rd param breaks arity detection)
-        def fn(acc, t):
-            return acc + F.when(
-                F.shiftright(F.xxhash64(t), b).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-
-        return fn
-
-    bit_votes = [F.aggregate(toks, F.lit(0), _vote(b)) for b in range(64)]
-    sig = None
-    for b, vote in enumerate(bit_votes):
-        bit = F.when(vote > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, b)
-        sig = term if sig is None else sig.bitwiseOR(term)
-    return df.select(F.col(id_col).alias("id"), sig.alias("simhash"))
-
-
 def simhash_signatures_portable(
     df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """64-bit SimHash on the portable cross-engine hash family:
     bit b of a token's hash is the PARITY of hex nibble b of its sha256
     (64 nibbles ↔ 64 bits), so a DuckDB oracle recomputes every vote,
-    every bit, and the packed signature value-for-value — the
-    hash-oracled form of :func:`simhash_signatures` (catalog row q45).
+    every bit, and the packed signature value-for-value (catalog row
+    q45).
 
     Emits the signature as two 32-bit halves ``(sim_hi, sim_lo)``
     instead of one BIGINT: packing bit 63 into an int64 wraps negative
@@ -1003,8 +988,7 @@ def simhash_signatures_portable(
     windows.  Each token's sha256 is computed once and bound with
     :func:`_let`; the 64-way nibble ``transform`` reads the bound hex
     string (inlined into the interpreted lambda it would be recomputed
-    per nibble, 64 times per token).  The throughput path stays
-    :func:`simhash_signatures` on xxhash64."""
+    per nibble, 64 times per token)."""
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(_tokens(F.col(text_col)))).alias("token"),

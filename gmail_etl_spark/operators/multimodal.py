@@ -13,9 +13,8 @@ pixel-derived mean.  ``encode_png`` / nearest-neighbor resampling close
 the loop for the resize stage.  Exotic formats (JPEG's DCT pipeline,
 video containers) belong to PIL/opencv on a production image; unknown or
 corrupt payloads degrade to ``format='raw'`` with null dims exactly like
-a tolerant production decode stage.  :func:`fake_image_features` remains
-as the header-convention test double for plumbing tests that want
-payload bytes to be human-writable.
+a tolerant production decode stage.  ``attach_media_features`` takes any
+decoder with the same return shape.
 """
 
 from __future__ import annotations
@@ -254,25 +253,6 @@ def decode_image(payload: bytes) -> dict:
         return {"format": "raw", "width": None, "height": None, "px_mean": None}
     mean = (sum(px) / len(px)) if px else None
     return {"format": fmt, "width": width, "height": height, "px_mean": mean}
-
-
-def fake_image_features(payload: bytes) -> dict:
-    """Deterministic stand-in decoder.
-
-    Convention: payload[0:2] = width, payload[2:4] = height (big-endian),
-    payload[4:8] = format tag ascii.  Anything shorter is 'raw' with
-    null dims — mirroring how a real decoder degrades on corrupt input.
-    """
-    if payload is None:
-        return {"format": None, "width": None, "height": None, "px_mean": None}
-    if len(payload) >= 8:
-        return {
-            "format": payload[4:8].decode("ascii", "replace"),
-            "width": int.from_bytes(payload[0:2], "big"),
-            "height": int.from_bytes(payload[2:4], "big"),
-            "px_mean": None,
-        }
-    return {"format": "raw", "width": None, "height": None, "px_mean": None}
 
 
 def attach_media_features(

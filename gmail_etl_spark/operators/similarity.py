@@ -10,6 +10,16 @@ output), keeping the operator declarative.
 The dot products run as JVM array expressions (``zip_with`` +
 ``aggregate``) — vectorized codegen, no Python.  Arrays are cast to
 double so results are bit-identical to any double-precision oracle.
+
+Each kernel exists once and every operator calls that copy: squared L2
+(:func:`_sq_dist`), nearest centroid over plan literals
+(:func:`_nearest`) and in numpy (:func:`_nearest_np`), the cosine verify
+join (:func:`_cosine_verify`), the per-batch Arrow cosine top-k
+(:func:`_cosine_topk_arrow`), the PQ/ADC search (:func:`_adc_search`)
+and the (score, id) top-k merge window (:func:`_rank_topk`).  The
+driver-side numpy distances (PQ training, LUTs, probe picks) stay in the
+direct (v - c)² form: the expanded form rounds differently, and the
+trained codebooks and probe sets depend on those bits.
 """
 
 from __future__ import annotations
@@ -17,7 +27,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gmail_etl_spark.operators.dedup import _pair_expansion, capped_pair_candidates
+from gmail_etl_spark.operators.dedup import (
+    _pair_expansion,
+    _score_barrier,
+    capped_pair_candidates,
+)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -28,6 +42,55 @@ def _dot(a: Column, b: Column) -> Column:
 
 def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
+
+
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Squared L2 distance of two ARRAY<DOUBLE> columns."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, d: acc + d,
+    )
+
+
+def _lit_vec(values) -> Column:
+    """A vector compiled into the plan as an ARRAY<DOUBLE> literal."""
+    return F.array(*[F.lit(x) for x in values])
+
+
+def _nearest(v: Column, centroids) -> Column:
+    """Index of the literal centroid nearest ``v`` by squared L2: a
+    map-only ``array_min`` over (dist, index) structs, so equal distances
+    break to the lowest index.  The plan holds len(centroids)·dim
+    literals."""
+    return F.array_min(
+        F.array(
+            *[
+                F.struct(_sq_dist(v, _lit_vec(c)).alias("dist"), F.lit(i).alias("idx"))
+                for i, c in enumerate(centroids)
+            ]
+        )
+    )["idx"]
+
+
+def _nearest_np(v, C):
+    """Row-wise index of the nearest row of ``C`` by squared L2, numpy
+    side.  The expanded form costs one BLAS matmul per batch instead of
+    a (batch, k, dim) difference tensor, so peak memory stays O(batch·k)
+    at any k.  ``argmin`` returns the first minimum: the same
+    lowest-index tie-break as :func:`_nearest`."""
+    d2 = (v * v).sum(axis=1)[:, None] - 2.0 * (v @ C.T) + (C * C).sum(axis=1)[None, :]
+    return d2.argmin(axis=1)
+
+
+def _rank_topk(
+    df: DataFrame, k: int, score: str, ascending: bool = False, rank: str = "rank"
+) -> DataFrame:
+    """Each query's first ``k`` rows in the total order (``score``,
+    ``neighbor_id`` asc), numbered from 1 in column ``rank``."""
+    order = F.asc(score) if ascending else F.desc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -79,11 +142,7 @@ def cosine_topk(
             6,
         ).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k, "sim")
 
 
 def _hyperplane(plane: int, dim: int) -> list[float]:
@@ -206,10 +265,7 @@ def hyperplane_lsh_pairs(
         )
     rows_per_band = n_planes // bands
     v = F.col("v")
-    bits = [
-        (_dot(v, F.array(*[F.lit(c) for c in _hyperplane(p, dim)])) > 0).cast("int")
-        for p in range(n_planes)
-    ]
+    bits = [(_dot(v, _lit_vec(_hyperplane(p, dim))) > 0).cast("int") for p in range(n_planes)]
     sig = corpus.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
@@ -236,36 +292,39 @@ def hyperplane_lsh_pairs(
         .filter(F.size("ids") > 1)
     )
     candidates = capped_pair_candidates(buckets, max_bucket)
-    # per-vector norms computed once below the join (cosine_topk's
-    # pre-norm discipline): a vector in many candidate pairs would
-    # otherwise pay its norm per pair.  The sim expression itself is
-    # materialized ONCE per pair behind _score_barrier (r13): without
-    # the barrier the threshold filter is pushed into the join condition
-    # and the interpreted-HOF dot product runs twice per surviving pair
-    # (once in the condition, once in the output projection).  The
-    # barrier is the identity on every double and on NULL.
-    from gmail_etl_spark.operators.dedup import _score_barrier
-
-    vecs = sig.select("id", "v", _norm(F.col("v")).alias("nrm")).hint("shuffle_hash")
-    sim = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    scored = (
-        candidates.join(
-            vecs.select(
-                F.col("id").alias("a_id"), F.col("v").alias("va"), F.col("nrm").alias("na")
-            ),
-            "a_id",
-        )
-        .join(
-            vecs.select(
-                F.col("id").alias("b_id"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-            ),
-            "b_id",
-        )
-        .select("a_id", "b_id", _score_barrier(sim).alias("_sim"))
+    return _cosine_verify(candidates, sig.select("id", "v"), threshold).select(
+        "a_id", "b_id", F.round("_sim", 6).alias("sim")
     )
+
+
+def _cosine_verify(candidates: DataFrame, vecs: DataFrame, threshold: float) -> DataFrame:
+    """Exact cosine verify of candidate pairs: (a_id, b_id, _sim) for
+    every ``candidates`` (a_id, b_id) pair whose cosine is at least
+    ``threshold``; ``vecs`` is (id, v ARRAY<DOUBLE>).
+
+    Vectors re-enter by id through shuffle-hash joins, so the corpus
+    side is never mis-broadcast.  Per-vector norms are computed once
+    below the joins (cosine_topk's pre-norm discipline): a vector in
+    many candidate pairs would otherwise pay its norm per pair, and
+    dot/(na*nb) is the identical double expression.  The sim itself is
+    materialized ONCE per pair behind ``_score_barrier`` (r13): without
+    the barrier the threshold filter is pushed into the join condition
+    and the interpreted-HOF dot product runs twice per surviving pair
+    (once in the condition, once in the output projection).  The
+    barrier is the identity on every double and on NULL."""
+    vecs = vecs.select("id", "v", _norm(F.col("v")).alias("nrm")).hint("shuffle_hash")
+
+    def side(s: str) -> DataFrame:
+        return vecs.select(
+            F.col("id").alias(f"{s}_id"), F.col("v").alias(f"v{s}"), F.col("nrm").alias(f"n{s}")
+        )
+
+    sim = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
-        scored.filter(F.col("_sim") >= threshold)
-        .select("a_id", "b_id", F.round("_sim", 6).alias("sim"))
+        candidates.join(side("a"), "a_id")
+        .join(side("b"), "b_id")
+        .select("a_id", "b_id", _score_barrier(sim).alias("_sim"))
+        .filter(F.col("_sim") >= threshold)
     )
 
 
@@ -342,29 +401,58 @@ def cosine_topk_vectorized(
     Partial top-k is batching-independent, so the rewrite cannot change
     results even where Arrow batch boundaries differ.
     """
+    q_rows = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("q_vec"),
+    ).collect()
+    return _cosine_topk_arrow(
+        corpus,
+        id_col,
+        vec_col,
+        k,
+        queries.schema[id_col].dataType,
+        [r["query_id"] for r in q_rows],
+        [r["q_vec"] for r in q_rows],
+    )
+
+
+def _cosine_topk_arrow(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    q_id_dt,
+    q_ids: list,
+    q_vecs: list,
+    probed=None,
+) -> DataFrame:
+    """The per-batch Arrow cosine top-k behind
+    :func:`cosine_topk_vectorized` and ``query_ivf_index(
+    rank_strategy="vectorized")``.
+
+    ``q_ids``/``q_vecs`` is the collected query set, its ids of Spark
+    type ``q_id_dt``.  ``probed`` (IVF only) is an (n_queries, n_cells)
+    boolean matrix, True where query j probes cell c; the corpus then
+    carries a ``cluster`` column, and a row is a candidate only for the
+    queries that probe its cell (:func:`_batch_topk`'s ``cand`` mask).
+    Without it, the plan and the per-batch work are the brute-force
+    path's alone.
+    """
     import numpy as np
     import pyarrow as pa
 
-    q_rows = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("q_vec"),
-        )
-        .collect()
-    )
-    if not q_rows:
+    q_id_type = q_id_dt.simpleString()
+    if not q_ids:
         # empty query set: empty result with the normal path's schema
         # (query_id in the queries' id type, plus the rank column the
         # window adds), not a driver-side numpy AxisError
         return corpus.select(
-            F.col(id_col)
-            .cast(queries.schema[id_col].dataType.simpleString())
-            .alias("query_id"),
+            F.col(id_col).cast(q_id_type).alias("query_id"),
             F.col(id_col).alias("neighbor_id"),
             F.lit(0.0).alias("sim"),
             F.lit(1).alias("rank"),
         ).limit(0)
-    q_mat = np.array([r["q_vec"] for r in q_rows], dtype=np.float64)
+    q_mat = np.array(q_vecs, dtype=np.float64)
     # zero-norm queries get sim 0 everywhere (id-ordered top-k), the
     # same convention as the corpus-side guard below — not NaN rankings
     q_norms = np.linalg.norm(q_mat, axis=1, keepdims=True)
@@ -378,8 +466,6 @@ def cosine_topk_vectorized(
     # location has moved across releases (ADVICE r12) — fall back to an
     # explicit map of the id types this operator supports rather than
     # crash on a version bump.
-    q_id_dt = queries.schema[id_col].dataType
-    q_id_type = q_id_dt.simpleString()
     c_id_type = corpus.schema[id_col].dataType.simpleString()
     try:
         from pyspark.sql.pandas.types import to_arrow_type
@@ -405,8 +491,8 @@ def cosine_topk_vectorized(
                 f"{q_id_type!r} (supported without pyspark's to_arrow_type: "
                 f"decimal and {sorted(_PA_BY_SIMPLE)})"
             ) from None
-    q_id_arr = pa.array([r["query_id"] for r in q_rows], type=q_id_pa)
-    q_ids = q_id_arr.to_numpy(zero_copy_only=False)
+    q_id_arr = pa.array(q_ids, type=q_id_pa)
+    q_ids_np = q_id_arr.to_numpy(zero_copy_only=False)
 
     def _kernel(batches):
         for b in batches:
@@ -445,24 +531,25 @@ def cosine_topk_vectorized(
             norms = np.linalg.norm(c, axis=1, keepdims=True)
             np.divide(c, norms, out=c, where=norms > 0)
             sims = c @ q_mat.T  # (batch, n_queries)
-            qi, ri, sim = _batch_topk(ids, sims, q_ids, k)
+            cand = None
+            if probed is not None:
+                cand = probed[:, b.column(2).to_numpy(zero_copy_only=False)]
+            qi, ri, sim = _batch_topk(ids, sims, q_ids_np, k, cand)
             yield pa.RecordBatch.from_arrays(
                 [q_id_arr.take(qi), b.column(0).take(ri), pa.array(sim)],
                 names=["query_id", "neighbor_id", "sim"],
             )
 
-    partials = corpus.select(
+    cols = [
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("c_vec"),
-    ).mapInArrow(
+    ]
+    if probed is not None:
+        cols.append(F.col("cluster"))
+    partials = corpus.select(*cols).mapInArrow(
         _kernel, f"query_id {q_id_type}, neighbor_id {c_id_type}, sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        partials.withColumn("sim", F.round("sim", 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(partials.withColumn("sim", F.round("sim", 6)), k, "sim")
 
 
 def train_kmeans(
@@ -478,9 +565,9 @@ def train_kmeans(
     trainer (q51's cell assignment, learned instead of given).
 
     Deterministic: centroids initialize from the k lowest-id vectors, and
-    every assignment argmin tie-breaks on cluster index (both strategies:
-    ``array_min`` over (dist, cluster) structs and ``numpy.argmin``
-    first-occurrence pick the lowest cluster index on equal distance).
+    every assignment argmin tie-breaks on cluster index (both strategies,
+    :func:`_nearest` and :func:`_nearest_np`, pick the lowest cluster
+    index on equal distance).
 
     ``assign_strategy``:
 
@@ -541,26 +628,7 @@ def train_kmeans(
         return _train_kmeans_vectorized(base, centroids, iters, corpus, id_col)
 
     def _assign(cents: list[list[float]]):
-        dists = [
-            F.aggregate(
-                F.zip_with(
-                    F.col("v"),
-                    F.array(*[F.lit(c) for c in cent]),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            )
-            for cent in cents
-        ]
-        pairs = F.array(
-            *[
-                F.struct(d.alias("dist"), F.lit(i).alias("cluster"))
-                for i, d in enumerate(dists)
-            ]
-        )
-        # array_min on structs orders by (dist, cluster): deterministic tie-break
-        return base.withColumn("cluster", F.array_min(pairs)["cluster"])
+        return base.withColumn("cluster", _nearest(F.col("v"), cents))
 
     sum_col = (
         F.sum(F.col("val").cast("decimal(20,12)")) if exact_updates else F.sum("val")
@@ -601,16 +669,6 @@ def _train_kmeans_vectorized(
 
     id_type = corpus.schema[id_col].dataType.simpleString()
 
-    def _dists(v: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
-        # squared euclidean via the expanded form: one BLAS matmul per
-        # batch instead of a (batch, k, dim) difference tensor, so peak
-        # memory stays O(batch·k) at any k
-        return (
-            (v * v).sum(axis=1)[:, None]
-            - 2.0 * (v @ C.T)
-            + (C * C).sum(axis=1)[None, :]
-        )
-
     def _assign_vec(cents: list[list[float]]) -> DataFrame:
         C = np.array(cents, dtype=np.float64)
 
@@ -619,13 +677,8 @@ def _train_kmeans_vectorized(
                 if pdf.empty:
                     continue
                 v = np.array(pdf["v"].tolist(), dtype=np.float64)
-                # argmin returns the FIRST minimal index: same lowest-
-                # cluster tie-break as the expr path's array_min struct
                 yield pd.DataFrame(
-                    {
-                        "id": pdf["id"],
-                        "cluster": _dists(v, C).argmin(axis=1).astype("int32"),
-                    }
+                    {"id": pdf["id"], "cluster": _nearest_np(v, C).astype("int32")}
                 )
 
         return base.mapInPandas(kern, f"id {id_type}, cluster int")
@@ -638,7 +691,7 @@ def _train_kmeans_vectorized(
                 if pdf.empty:
                     continue
                 v = np.array(pdf["v"].tolist(), dtype=np.float64)
-                a = _dists(v, C).argmin(axis=1)
+                a = _nearest_np(v, C)
                 present = np.unique(a)
                 sums = np.zeros((len(present), v.shape[1]), dtype=np.float64)
                 counts = np.zeros(len(present), dtype=np.int64)
@@ -699,8 +752,8 @@ def semantic_dedup(
     :func:`train_kmeans`; ``exact_updates`` passes through for the
     oracle-replayable trainer).  Candidate ids expand from ONE shuffle of
     the narrow (cluster, id) rows (same grouped i<j expansion as the
-    LSH paths); vectors re-enter by id only for candidate pairs, with
-    shuffle_hash so the corpus side can never be mis-broadcast.
+    LSH paths); vectors re-enter by id only for candidate pairs, through
+    the same verify join as :func:`hyperplane_lsh_pairs`.
     Returns ``corpus``'s schema filtered to survivors.
     """
     from gmail_etl_spark.operators.dedup import near_dedup
@@ -717,32 +770,10 @@ def semantic_dedup(
         .select(F.explode(F.expr(_pair_expansion("ids"))).alias("p"))
         .select("p.a_id", "p.b_id")
     )
-    # per-vector norms below the join (cosine_topk's pre-norm
-    # discipline): a vector in many within-cell pairs pays its norm
-    # once, not per pair; dot/(na*nb) is the identical double expression
     vecs = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        _norm(F.col(vec_col).cast("array<double>")).alias("nrm"),
-    ).hint("shuffle_hash")
-    pairs = (
-        candidates.join(
-            vecs.select(
-                F.col("id").alias("a_id"), F.col("v").alias("va"), F.col("nrm").alias("na")
-            ),
-            "a_id",
-        )
-        .join(
-            vecs.select(
-                F.col("id").alias("b_id"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-            ),
-            "b_id",
-        )
-        .filter(
-            (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))) >= threshold
-        )
-        .select("a_id", "b_id")
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
+    pairs = _cosine_verify(candidates, vecs, threshold).select("a_id", "b_id")
     return near_dedup(corpus, id_col, pairs)
 
 
@@ -831,27 +862,9 @@ def pq_encode(
         F.col(vec_col).cast("array<double>").alias("v"),
         *keep_cols,
     )
-    code_cols = []
-    for s in range(m):
-        sub = F.slice(F.col("v"), s * dsub + 1, dsub)
-        pairs = F.array(
-            *[
-                F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            sub,
-                            F.array(*[F.lit(x) for x in cent]),
-                            lambda a, b: (a - b) * (a - b),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, d: acc + d,
-                    ).alias("dist"),
-                    F.lit(ci).alias("code"),
-                )
-                for ci, cent in enumerate(codebooks[s])
-            ]
-        )
-        code_cols.append(F.array_min(pairs)["code"])
+    code_cols = [
+        _nearest(F.slice(F.col("v"), s * dsub + 1, dsub), codebooks[s]) for s in range(m)
+    ]
     return base.select("id", F.array(*code_cols).alias("codes"), *keep_cols)
 
 
@@ -886,98 +899,8 @@ def pq_topk(
     exact distances JVM-side.  Returns (query_id, neighbor_id, adist,
     dist, rank) — adist the ADC estimate, dist the exact squared L2
     used for the final rank."""
-    import numpy as np
-    import pandas as pd
-
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
     enc = pq_encode(corpus, codebooks, id_col, vec_col)
-    q_rows = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .orderBy("query_id")
-        .collect()
-    )
-    q_ids = [r["query_id"] for r in q_rows]
-    # (n_queries, m, ksub) LUT tensor: exact subvector→centroid distances.
-    luts = np.asarray(
-        [
-            [
-                ((np.asarray(codebooks[s], dtype=np.float64)
-                  - np.asarray(r["v"], dtype=np.float64)[s * dsub : (s + 1) * dsub][None, :])
-                 ** 2).sum(axis=1)
-                for s in range(m)
-            ]
-            for r in q_rows
-        ]
-    )
-    kk = k * rerank
-
-    def _adc_kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["id"].to_numpy()
-            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)  # (batch, m)
-            out_q, out_n, out_d = [], [], []
-            for qi, qid in enumerate(q_ids):
-                # gather-sum: adist[i] = Σ_s lut[s, codes[i, s]]
-                ad = luts[qi][np.arange(m)[None, :], codes].sum(axis=1)
-                mask = ids != qid
-                cand_ids, cand_d = ids[mask], ad[mask]
-                if len(cand_ids) > kk:
-                    order = np.lexsort((cand_ids, np.round(cand_d, 6)))[:kk]
-                else:
-                    order = np.arange(len(cand_ids))
-                out_q.extend([qid] * len(order))
-                out_n.extend(cand_ids[order])
-                out_d.extend(cand_d[order])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "adist": out_d}
-            )
-
-    id_type = queries.schema[id_col].dataType.simpleString()
-    nbr_type = corpus.schema[id_col].dataType.simpleString()
-    partials = enc.mapInPandas(
-        _adc_kernel,
-        f"query_id {id_type}, neighbor_id {nbr_type}, adist double",
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        partials.withColumn("adist", F.round("adist", 6))
-        .withColumn("_rn", F.row_number().over(w_short))
-        .filter(F.col("_rn") <= kk)
-        .drop("_rn")
-    )
-    # Exact re-rank: fetch candidate vectors (broadcast the tiny
-    # shortlist into the corpus scan) and score against the exact query
-    # vector, carried as a second broadcast column.
-    spark = corpus.sparkSession
-    qvec_df = spark.createDataFrame(
-        [(r["query_id"], [float(x) for x in r["v"]]) for r in q_rows],
-        f"query_id {id_type}, q_vec array<double>",
-    )
-    cvecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-    )
-    dist = F.aggregate(
-        F.zip_with(F.col("q_vec"), F.col("c_vec"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-    w_final = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        cvecs.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(qvec_df), "query_id")
-        .select("query_id", "neighbor_id", "adist", F.round(dist, 6).alias("dist"))
-        .withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
-    )
+    return _adc_search(queries, corpus, enc, codebooks, id_col, vec_col, k, rerank)
 
 
 def ivf_pq_topk(
@@ -1018,18 +941,14 @@ def ivf_pq_topk(
         raise ValueError(
             f"assign_strategy must be 'expr' or 'vectorized', got {assign_strategy!r}"
         )
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
     base = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
     if assign_strategy == "vectorized":
         # large-k form (same trade as train_kmeans's vectorized path):
         # centroids in a kernel closure, one matmul per Arrow batch,
-        # zero plan literals; argmin first-occurrence = the expr path's
-        # lowest-cell tie-break
+        # zero plan literals
         C_cells = np.asarray(centroids, dtype=np.float64)
-        c2_cells = (C_cells * C_cells).sum(axis=1)
         corpus_id_type = corpus.schema[id_col].dataType.simpleString()
 
         def _cell_kern(batches):
@@ -1037,16 +956,11 @@ def ivf_pq_topk(
                 if pdf.empty:
                     continue
                 v = np.array(pdf["v"].tolist(), dtype=np.float64)
-                d2 = (
-                    (v * v).sum(axis=1)[:, None]
-                    - 2.0 * (v @ C_cells.T)
-                    + c2_cells[None, :]
-                )
                 yield pd.DataFrame(
                     {
                         "id": pdf["id"],
                         "v": pdf["v"],
-                        "cell": d2.argmin(axis=1).astype("int32"),
+                        "cell": _nearest_np(v, C_cells).astype("int32"),
                     }
                 )
 
@@ -1055,27 +969,39 @@ def ivf_pq_topk(
         )
     else:
         # map-only cell assignment compiled from centroid literals
-        cell_pairs = F.array(
-            *[
-                F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("v"),
-                            F.array(*[F.lit(c) for c in cent]),
-                            lambda x, y: (x - y) * (x - y),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, d: acc + d,
-                    ).alias("dist"),
-                    F.lit(ci).alias("cell"),
-                )
-                for ci, cent in enumerate(centroids)
-            ]
-        )
-        with_cell = base.withColumn("cell", F.array_min(cell_pairs)["cell"])
+        with_cell = base.withColumn("cell", _nearest(F.col("v"), centroids))
     # cell rides along through the encode projection: no join, no shuffle
     enc = pq_encode(with_cell, codebooks, "id", "v", keep_cols=("cell",))
+    return _adc_search(
+        queries, corpus, enc, codebooks, id_col, vec_col, k, rerank, centroids, nprobe
+    )
 
+
+def _adc_search(
+    queries: DataFrame,
+    corpus: DataFrame,
+    enc: DataFrame,
+    codebooks: list[list[list[float]]],
+    id_col: str,
+    vec_col: str,
+    k: int,
+    rerank: int,
+    centroids: list[list[float]] | None = None,
+    nprobe: int = 0,
+) -> DataFrame:
+    """The two-stage PQ search of :func:`pq_topk` and
+    :func:`ivf_pq_topk`: an ADC shortlist of ``k * rerank`` rows per
+    query over the encoded corpus ``enc`` (id, codes), then the exact L2
+    re-rank against ``corpus``.
+
+    With ``centroids``, ``enc`` also carries each row's ``cell`` and a
+    query scores only the rows of its ``nprobe`` nearest cells; without,
+    every row is probed."""
+    import numpy as np
+    import pandas as pd
+
+    m = len(codebooks)
+    dsub = len(codebooks[0][0])
     q_rows = (
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -1084,41 +1010,48 @@ def ivf_pq_topk(
         .orderBy("query_id")
         .collect()
     )
-    q_ids = [r["query_id"] for r in q_rows]
-    cents = np.asarray(centroids, dtype=np.float64)
-    luts, probes = [], []
-    for r in q_rows:
-        v = np.asarray(r["v"], dtype=np.float64)
-        cd = ((cents - v[None, :]) ** 2).sum(axis=1)
-        probes.append(set(np.argsort(cd, kind="stable")[:nprobe].tolist()))
-        luts.append(
+    q_ids = np.array([r["query_id"] for r in q_rows])
+    q_vecs = [np.asarray(r["v"], dtype=np.float64) for r in q_rows]
+    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    # (n_queries, m, ksub) LUT tensor: exact subvector→centroid distances.
+    luts = np.asarray(
+        [
             [
-                ((np.asarray(codebooks[s], dtype=np.float64)
-                  - v[s * dsub : (s + 1) * dsub][None, :]) ** 2).sum(axis=1)
+                ((books[s] - v[s * dsub : (s + 1) * dsub][None, :]) ** 2).sum(axis=1)
                 for s in range(m)
             ]
+            for v in q_vecs
+        ]
+    )
+    probed = None
+    if centroids is not None:
+        cents = np.asarray(centroids, dtype=np.float64)
+        probed = _probed_cells(
+            [
+                np.argsort(((cents - v[None, :]) ** 2).sum(axis=1), kind="stable")[:nprobe]
+                for v in q_vecs
+            ],
+            len(centroids),
         )
-    luts = np.asarray(luts)
     kk = k * rerank
 
     def _adc_kernel(batches):
+        sub = np.arange(m)[None, :]
         for pdf in batches:
             if pdf.empty:
                 continue
             ids = pdf["id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
+            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)  # (batch, m)
+            cand = ids[None, :] != q_ids[:, None]
+            if probed is not None:
+                cand &= probed[:, pdf["cell"].to_numpy()]
             out_q, out_n, out_d = [], [], []
             for qi, qid in enumerate(q_ids):
-                probe_mask = np.isin(cells, list(probes[qi])) & (ids != qid)
-                if not probe_mask.any():
-                    continue
-                cand_ids = ids[probe_mask]
-                ad = luts[qi][np.arange(m)[None, :], codes[probe_mask]].sum(axis=1)
-                if len(cand_ids) > kk:
-                    order = np.lexsort((cand_ids, np.round(ad, 6)))[:kk]
-                else:
-                    order = np.arange(len(cand_ids))
+                rows = cand[qi]
+                cand_ids = ids[rows]
+                # gather-sum over the candidates only: adist[i] = Σ_s lut[s, codes[i, s]]
+                ad = luts[qi][sub, codes[rows]].sum(axis=1)
+                order = np.lexsort((cand_ids, np.round(ad, 6)))[:kk]
                 out_q.extend([qid] * len(order))
                 out_n.extend(cand_ids[order])
                 out_d.extend(ad[order])
@@ -1132,17 +1065,13 @@ def ivf_pq_topk(
         _adc_kernel,
         f"query_id {id_type}, neighbor_id {nbr_type}, adist double",
     )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        partials.withColumn("adist", F.round("adist", 6))
-        .withColumn("_rn", F.row_number().over(w_short))
-        .filter(F.col("_rn") <= kk)
-        .drop("_rn")
-    )
-    spark = corpus.sparkSession
-    qvec_df = spark.createDataFrame(
+    shortlist = _rank_topk(
+        partials.withColumn("adist", F.round("adist", 6)), kk, "adist", ascending=True, rank="_rn"
+    ).drop("_rn")
+    # Exact re-rank: fetch candidate vectors (broadcast the tiny
+    # shortlist into the corpus scan) and score against the exact query
+    # vector, carried as a second broadcast column.
+    qvec_df = corpus.sparkSession.createDataFrame(
         [(r["query_id"], [float(x) for x in r["v"]]) for r in q_rows],
         f"query_id {id_type}, q_vec array<double>",
     )
@@ -1150,19 +1079,25 @@ def ivf_pq_topk(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("c_vec"),
     )
-    dist = F.aggregate(
-        F.zip_with(F.col("q_vec"), F.col("c_vec"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-    w_final = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
+    dist = F.round(_sq_dist(F.col("q_vec"), F.col("c_vec")), 6)
+    scored = (
         cvecs.join(F.broadcast(shortlist), "neighbor_id")
         .join(F.broadcast(qvec_df), "query_id")
-        .select("query_id", "neighbor_id", "adist", F.round(dist, 6).alias("dist"))
-        .withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "adist", dist.alias("dist"))
     )
+    return _rank_topk(scored, k, "dist", ascending=True)
+
+
+def _probed_cells(probes, n_cells: int):
+    """(n_queries, n_cells) boolean matrix, True where query j probes
+    cell c, from each query's probed cell ids.  Indexed by a batch's
+    cell column, it gives every query's candidate mask at once."""
+    import numpy as np
+
+    probed = np.zeros((len(probes), n_cells), dtype=bool)
+    for j, cells in enumerate(probes):
+        probed[j, list(cells)] = True
+    return probed
 
 
 # ---------------------------------------------------------------------------
@@ -1353,12 +1288,12 @@ def query_ivf_index(
     SAME candidate set (probed cells minus the query itself, under the
     (sim rounded to 6 DESC, neighbor id) total order, row-identical by
     test): ``"expr"`` (default) joins queries to probed vectors and
-    ranks with the codegen cosine; ``"vectorized"`` closes the
-    (bounded) query set over a ``mapInPandas`` kernel — one numpy
-    matmul per probed Arrow batch with per-batch partial top-k, the
-    :func:`cosine_topk_vectorized` discipline, so the probed scan's
-    byte savings are not given back as per-row expression overhead at
-    wide dims.  ``"auto"`` routes on the measured crossover (DEVNOTES):
+    ranks with the codegen cosine; ``"vectorized"`` runs
+    :func:`cosine_topk_vectorized`'s Arrow kernel over the probed scan,
+    with each query's probed cells as its candidate mask — one numpy
+    matmul per probed Arrow batch with per-batch partial top-k, so the
+    probed scan's byte savings are not given back as per-row expression
+    overhead at wide dims.  ``"auto"`` routes on the measured crossover (DEVNOTES):
     once the per-query probe sets union to ~the whole cell space
     (``n_queries × nprobe >= k_cells``), the join path materializes
     nearly query×corpus candidate rows and the matmul kernel wins;
@@ -1403,17 +1338,6 @@ def query_ivf_index(
             "distributed, no collect)"
         )
 
-    def dist2(vec: Column, c: list[float]) -> Column:
-        return F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(x) for x in c]),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        )
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("q_vec"),
@@ -1447,7 +1371,7 @@ def query_ivf_index(
                     F.array(
                         *[
                             F.struct(
-                                F.round(dist2(F.col("q_vec"), c), 9).alias("d"),
+                                F.round(_sq_dist(F.col("q_vec"), _lit_vec(c)), 9).alias("d"),
                                 F.lit(ci).alias("cell"),
                             )
                             for ci, c in cents
@@ -1466,89 +1390,29 @@ def query_ivf_index(
     vectors = spark.read.parquet(f"{path}/vectors").filter(
         F.col("cluster").isin(probe_set)
     )
-    from pyspark.sql import Window as W
-
     if rank_strategy == "vectorized":
-        import numpy as np
-        import pandas as pd
-
-        q_id_type2 = queries.schema[id_col].dataType.simpleString()
-        c_id_type = vectors.schema[id_col].dataType.simpleString()
         per_q: dict = {}
-        for r in scored_cells.select(
-            "query_id", "q_vec", "cluster"
-        ).collect():  # bounded: q × nprobe rows
-            vec, cells = per_q.setdefault(
-                r["query_id"], (list(r["q_vec"]), set())
-            )
-            cells.add(r["cluster"])
-        if not per_q:
-            # empty query set: empty result with the join path's schema,
-            # not a driver-side numpy AxisError
-            return vectors.select(
-                F.col(id_col).cast(q_id_type2).alias("query_id"),
-                F.col(id_col).alias("neighbor_id"),
-                F.lit(0.0).alias("sim"),
-                F.lit(1).alias("rank"),
-            ).limit(0)
-        q_ids = list(per_q)
-        q_mat = np.array([per_q[q][0] for q in q_ids], dtype=np.float64)
-        q_norms = np.linalg.norm(q_mat, axis=1, keepdims=True)
-        np.divide(q_mat, q_norms, out=q_mat, where=q_norms > 0)
-        q_ids = np.array(q_ids)
-        # same candidate set as the join path: rows in a query's probed
-        # cells.  ``vectors`` holds only probe_set cells, so a row's
-        # cluster indexes a column of this (query, probed cell) matrix.
-        probe_cells = np.array(probe_set, dtype=np.int64)
-        probed = np.zeros((len(q_ids), len(probe_cells)), dtype=bool)
-        for j, (_, q_cells) in enumerate(per_q.values()):
-            probed[j, np.searchsorted(probe_cells, list(q_cells))] = True
-
-        def _kern(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                ids = pdf["__nid"].to_numpy()
-                cand = probed[
-                    :, np.searchsorted(probe_cells, pdf["cluster"].to_numpy())
-                ]
-                c = np.array(pdf["__cvec"].tolist(), dtype=np.float64)
-                norms = np.linalg.norm(c, axis=1, keepdims=True)
-                np.divide(c, norms, out=c, where=norms > 0)
-                sims = c @ q_mat.T  # (batch, n_queries)
-                qi, ri, sim = _batch_topk(ids, sims, q_ids, k, cand)
-                yield pd.DataFrame(
-                    {"query_id": q_ids[qi], "neighbor_id": ids[ri], "sim": sim}
-                )
-
-        partials = vectors.select(
-            F.col(id_col).alias("__nid"),
-            F.col(vec_col).cast("array<double>").alias("__cvec"),
-            "cluster",
-        ).mapInPandas(
-            _kern,
-            f"query_id {q_id_type2}, neighbor_id {c_id_type}, sim double",
-        )
-        w = W.partitionBy("query_id").orderBy(
-            F.desc("sim"), F.asc("neighbor_id")
-        )
-        return (
-            partials.withColumn("sim", F.round("sim", 6))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+        for r in scored_cells.collect():  # bounded: q × nprobe rows
+            per_q.setdefault(r["query_id"], (r["q_vec"], set()))[1].add(r["cluster"])
+        # same candidate set as the join path: rows in a query's probed cells
+        return _cosine_topk_arrow(
+            vectors,
+            id_col,
+            vec_col,
+            k,
+            queries.schema[id_col].dataType,
+            list(per_q),
+            [v for v, _ in per_q.values()],
+            # ``vectors`` holds only probe_set cells
+            _probed_cells([c for _, c in per_q.values()], max(probe_set, default=-1) + 1),
         )
 
     joined = scored_cells.join(vectors, "cluster").filter(
         F.col("query_id") != F.col(id_col)
     )
     sim = F.round(cosine(F.col("q_vec"), F.col(vec_col)), 6)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        joined.select(
-            "query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _rank_topk(
+        joined.select("query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim")),
+        k,
+        "sim",
     )

@@ -15,6 +15,7 @@ the Arrow boundary carries only the bytes it must.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -176,8 +177,11 @@ def run_pipeline(
     if ledger_path is not None:
         try:
             ledger = spark.read.parquet(ledger_path)
-        except Exception:
-            ledger = None  # first run: no ledger yet
+        except AnalysisException as e:
+            # only a missing path is a first run; an unreadable ledger must
+            # not silently reprocess and re-append every message
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
     fresh = dedup_against_ledger(raw, ledger)
     stage1 = transform_stage1(fresh)
     if fmt == "csv":

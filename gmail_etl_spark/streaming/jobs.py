@@ -1510,11 +1510,13 @@ def maintain_near_dup_index(
     for the incremental stream it exists for."""
     from gmail_etl_spark.operators.dedup import (
         _banded_keys,
+        _check_hash_family,
         _lsh_sigs,
         _pairs_from_sigs,
         near_dedup,
     )
 
+    _check_hash_family(hash_family)
     if int(compact_every) == 1:
         raise ValueError(
             "compact_every=1 is not a valid fold fanout (a single-dir fold "
@@ -1706,8 +1708,14 @@ def probe_near_dup_index(
     deletes the now-shadowed dirs, which surfaces as a transient
     FileNotFoundException at action time — rerun the probe (it
     re-lists).  See :func:`_cleanup_shadowed_index_dirs`."""
-    from gmail_etl_spark.operators.dedup import _banded_keys, _lsh_sigs
+    from gmail_etl_spark.operators.dedup import (
+        _banded_keys,
+        _check_hash_family,
+        _lsh_sigs,
+    )
 
+    if hash_family is not None:
+        _check_hash_family(hash_family)
     meta, dirs = _published_index(spark, index_dir)
     if not dirs:
         return docs.select(F.col(id_col).alias("id")).limit(0)

@@ -14,7 +14,7 @@ from gmail_etl_spark.operators.dedup import (
     jaccard_pairs,
     minhash_lsh_pairs,
     near_dedup,
-    simhash_signatures,
+    simhash_signatures_portable,
 )
 from tests.conftest import SF_DIR
 
@@ -541,24 +541,40 @@ def test_vectorized_knn_matches_jvm_path(spark):
         assert abs(vsim - sim) <= 1e-6
 
 
-def test_vectorized_knn_rejects_null_and_ragged_vectors(spark):
+def test_vectorized_knn_rejects_null_and_ragged_vectors(spark, tmp_path):
     """ADVICE r12 contract guard: a null or ragged-dim corpus vector
     must raise a clear error from the Arrow kernel, never silently
     misalign the reshaped matrix (the failure mode: total element count
-    still divides num_rows and every following row shifts)."""
+    still divides num_rows and every following row shifts).  The IVF
+    index's vectorized ranking runs the same kernel, so a hand-built
+    one-cell index holding such vectors raises the same errors."""
     from pyspark.errors.exceptions.captured import PythonException
 
-    from gmail_etl_spark.operators.similarity import cosine_topk_vectorized
+    from gmail_etl_spark.operators.similarity import (
+        cosine_topk_vectorized,
+        query_ivf_index,
+    )
 
     queries = spark.createDataFrame(
         [(900, [1.0, 0.0])], "vec_id long, embedding array<double>"
     )
+
+    def ivf(corpus, name):
+        path = str(tmp_path / name)
+        corpus.withColumn("cluster", F.lit(0)).coalesce(1).write.partitionBy(
+            "cluster"
+        ).parquet(f"{path}/vectors")
+        spark.createDataFrame(
+            [(0, [1.0, 0.0])], "cluster int, centroid array<double>"
+        ).write.parquet(f"{path}/centroids")
+        return query_ivf_index(
+            spark, path, queries, k=2, nprobe=1, rank_strategy="vectorized"
+        )
+
     null_vec = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0])],
         "vec_id long, embedding array<double>",
     ).coalesce(1)
-    with pytest.raises(PythonException, match="null"):
-        cosine_topk_vectorized(queries, null_vec, k=2).collect()
     # ragged: dims [2, 2, 4, 4] in one batch.  The 12 elements divide
     # into 4 rows of 3, so the reshape alone would succeed with every
     # row misaligned — only the offsets guard can raise here
@@ -571,8 +587,14 @@ def test_vectorized_knn_rejects_null_and_ragged_vectors(spark):
         ],
         "vec_id long, embedding array<double>",
     ).coalesce(1)
-    with pytest.raises(PythonException, match="ragged"):
-        cosine_topk_vectorized(queries, ragged, k=2).collect()
+    for name, corpus, match in (
+        ("null", null_vec, "corpus batch contains null"),
+        ("ragged", ragged, "ragged embedding dims"),
+    ):
+        with pytest.raises(PythonException, match=match):
+            cosine_topk_vectorized(queries, corpus, k=2).collect()
+        with pytest.raises(PythonException, match=match):
+            ivf(corpus, name).collect()
 
 
 def _per_query_topk(ids, sims, q_ids, k, cand=None):
@@ -823,14 +845,20 @@ def test_hyperplane_lsh_target_recall_preset(spark):
 def test_simhash_locality(spark):
     d = _docs(spark, 40).select("doc_id", "text")
     dup = d.select((F.col("doc_id") + 5000).alias("doc_id"), F.col("text"))
-    sigs = simhash_signatures(d.unionByName(dup), "doc_id", "text")
-    a = sigs.filter(F.col("id") < 5000).select(F.col("id"), F.col("simhash").alias("sa"))
-    b = sigs.filter(F.col("id") >= 5000).select(
-        (F.col("id") - 5000).alias("id"), F.col("simhash").alias("sb")
+    sigs = simhash_signatures_portable(d.unionByName(dup), "doc_id", "text")
+    a = sigs.filter(F.col("id") < 5000).select(
+        "id", F.col("sim_hi").alias("hi_a"), F.col("sim_lo").alias("lo_a")
     )
+    b = sigs.filter(F.col("id") >= 5000).select(
+        (F.col("id") - 5000).alias("id"),
+        F.col("sim_hi").alias("hi_b"),
+        F.col("sim_lo").alias("lo_b"),
+    )
+    hamming = F.expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)")
     joined = a.join(b, "id")
-    # identical text → identical signature
-    assert joined.filter(F.col("sa") != F.col("sb")).count() == 0
+    assert joined.count() == d.count()
+    # identical text → identical signature (Hamming distance 0)
+    assert joined.filter(hamming != 0).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -1098,10 +1126,28 @@ def test_fetched_messages_flow_through_pipeline(spark):
 def test_media_features_header_convention(spark):
     """The header-convention test double still drives the plumbing for
     human-writable payloads (explicit decoder injection)."""
-    from gmail_etl_spark.operators.multimodal import (
-        attach_media_features,
-        fake_image_features,
-    )
+    from gmail_etl_spark.operators.multimodal import attach_media_features
+
+    # local, so the Python workers get it pickled by value (they cannot
+    # import this test module)
+    def fake_image_features(payload: bytes) -> dict:
+        """Deterministic stand-in decoder.
+
+        Convention: payload[0:2] = width, payload[2:4] = height
+        (big-endian), payload[4:8] = format tag ascii.  Anything shorter
+        is 'raw' with null dims — mirroring how a real decoder degrades
+        on corrupt input.
+        """
+        if payload is None:
+            return {"format": None, "width": None, "height": None, "px_mean": None}
+        if len(payload) >= 8:
+            return {
+                "format": payload[4:8].decode("ascii", "replace"),
+                "width": int.from_bytes(payload[0:2], "big"),
+                "height": int.from_bytes(payload[2:4], "big"),
+                "px_mean": None,
+            }
+        return {"format": "raw", "width": None, "height": None, "px_mean": None}
 
     payload = (640).to_bytes(2, "big") + (480).to_bytes(2, "big") + b"png " + b"rest"
     df = spark.createDataFrame(
@@ -2147,7 +2193,8 @@ def test_query_ivf_bounded_queries_guard_and_auto_route(spark, tmp_path):
     )
 
     # (b) auto-routing: 2 queries × nprobe 3 = 6 < 12 cells → expr path
-    # (no python kernel in the plan); 5 × 3 = 15 >= 12 → matmul path.
+    # (no python kernel in the plan); 5 × 3 = 15 >= 12 → the Arrow
+    # matmul kernel.
     def plan_of(df) -> str:
         return df._jdf.queryExecution().explainString(
             df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -2163,8 +2210,8 @@ def test_query_ivf_bounded_queries_guard_and_auto_route(spark, tmp_path):
     auto_large = query_ivf_index(
         spark, path, q_large, k=4, nprobe=3, rank_strategy="auto"
     )
-    assert "MapInPandas" not in plan_of(auto_small)
-    assert "MapInPandas" in plan_of(auto_large)
+    assert "MapInArrow" not in plan_of(auto_small)
+    assert "MapInArrow" in plan_of(auto_large)
     # both routes return the explicit-strategy answer, row for row
     exp_small = query_ivf_index(
         spark, path, q_small, k=4, nprobe=3, rank_strategy="expr"

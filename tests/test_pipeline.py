@@ -61,6 +61,20 @@ def test_second_run_ingests_nothing(spark, raw_dir, tmp_path):
     assert second.count() == 0  # every id already in the ledger
 
 
+def test_unreadable_ledger_raises(spark, raw_dir, tmp_path):
+    """Only a missing ledger path means "first run".  A ledger that
+    exists but cannot be read must fail the run, not reprocess every
+    message and append it to the ledger again."""
+    ledger = tmp_path / "ledger"
+    ledger.mkdir()
+    (ledger / "part-00000.parquet").write_bytes(b"not parquet")
+    out = tmp_path / "stage1"
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_pipeline(spark, raw_dir + "/*.json", str(out), ledger_path=str(ledger))
+    assert not out.exists()
+    assert [p.name for p in ledger.iterdir()] == ["part-00000.parquet"]
+
+
 def test_corrupt_blob_skipped(spark, raw_dir):
     raw = read_raw(spark, raw_dir + "/*.json")
     ids = [r["id"] for r in raw.select("id").collect()]

@@ -1228,6 +1228,40 @@ def test_index_meta_lsh_shape_guard(spark, tmp_path):
         probe_near_dup_index(spark, index, probe_docs)
 
 
+def test_unknown_hash_family_rejected(spark, tmp_path):
+    """An LSH hash family other than xxhash64/sha256 raises from the
+    batch operator, the maintainer (before anything is written) and the
+    probe, instead of hashing with xxhash64 under the misspelled name."""
+    import pandas as pd
+
+    from gmail_etl_spark.operators.dedup import minhash_lsh_pairs
+    from gmail_etl_spark.streaming.jobs import (
+        maintain_near_dup_index,
+        probe_near_dup_index,
+    )
+
+    docs = spark.createDataFrame(
+        [(0, "a b c d"), (1, "a b c e")], "doc_id long, text string"
+    )
+    msg = r"'xxhash64' or 'sha256', got 'sha-256'"
+    with pytest.raises(ValueError, match=msg):
+        minhash_lsh_pairs(docs, "doc_id", "text", hash_family="sha-256")
+
+    src = tmp_path / "docs"
+    src.mkdir()
+    pd.DataFrame([(0, "a b c d")], columns=["doc_id", "text"]).to_parquet(
+        src / "0.parquet"
+    )
+    index = str(tmp_path / "ndindex")
+    with pytest.raises(ValueError, match=msg):
+        maintain_near_dup_index(
+            spark, str(src), index, str(tmp_path / "ckpt"), hash_family="sha-256"
+        )
+    assert not os.path.exists(index)
+    with pytest.raises(ValueError, match=msg):
+        probe_near_dup_index(spark, index, docs, hash_family="sha-256")
+
+
 def test_near_dup_index_stray_dirs_and_marker_fallback(spark, tmp_path):
     """Robustness of the resolve/list protocol: a stray non-numeric
     ``_b*`` dir is skipped (not a ValueError aborting every batch); with

@@ -211,9 +211,12 @@ def main() -> int:
             print(f"FAIL {name}: spark error {e}")
             continue
         if cq.oracle is None:
+            # no oracle to compare against, but the Spark-side hash still
+            # shows whether a refactor changed the rows
             results[name] = {
                 "status": "rows_only",
                 "spark_rows": len(spdf),
+                "value_hash": canon(spdf)[1],
                 "secs": round(time.time() - t0, 2),
             }
             print(f"ok   {name}: rows-only ({len(spdf)} rows, {time.time()-t0:.1f}s)")
