@@ -270,7 +270,6 @@ def _with_range_pid(
     df: DataFrame,
     order_by: Sequence[Column | str],
     num_partitions: int | None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Attach a partition-id column that ascends with the sort order —
     ``PID`` is a coarse, explicit version of the global order, the
@@ -278,16 +277,14 @@ def _with_range_pid(
     the load-bearing property (module docstring): the round-7 form
     derived it from physical partitioning and silently corrupted.
 
-    ``strategy``:
+    The leading order key picks the path:
 
-    - ``"auto"`` (default): the HISTOGRAM path when the leading order
-      key is a plain asc/desc numeric/timestamp/date column — pid is a
-      pure data function (equi-depth cut of a 64k-bucket histogram),
-      so no barrier and no range exchange at all; otherwise the
-      checkpoint barrier.
-    - ``"histogram"``: force the data-function path; raises if the
-      leading key is ineligible (caller asserts eligibility).
-    - ``"checkpoint"``: force the barrier path —
+    - a plain asc/desc numeric/timestamp/date column takes the
+      HISTOGRAM path — pid is a pure data function (equi-depth cut of a
+      64k-bucket histogram), so no barrier and no range exchange at
+      all;
+    - anything else, and the empty or degenerate frames
+      :func:`_histogram_pid` declines, takes the CHECKPOINT barrier —
       ``repartitionByRange`` with an EXPLICIT partition count (an
       AQE-sized exchange lets each consumer coalesce its read
       independently) + ``spark_partition_id`` + ``localCheckpoint`` so
@@ -309,8 +306,6 @@ def _with_range_pid(
     ``df`` can neither run build-time actions nor localCheckpoint, so
     it raises here rather than failing obscurely inside Spark (route
     streaming global ranks through ``foreachBatch``)."""
-    if strategy not in ("auto", "histogram", "checkpoint"):
-        raise ValueError(f"unknown boundary strategy: {strategy!r}")
     if df.isStreaming:
         raise TypeError(
             "distributed_window helpers are batch-only: the histogram "
@@ -324,16 +319,9 @@ def _with_range_pid(
             1, df.sparkSession.sparkContext.defaultParallelism * 8
         )
     num_partitions = int(num_partitions)
-    if strategy in ("auto", "histogram"):
-        fast = _histogram_pid(df, order_by, num_partitions)
-        if fast is not None:
-            return fast
-        if strategy == "histogram":
-            raise ValueError(
-                "boundary_strategy='histogram' requires a plain asc/desc "
-                "numeric, timestamp, or date leading order column; got "
-                f"{order_by[0]!r}"
-            )
+    fast = _histogram_pid(df, order_by, num_partitions)
+    if fast is not None:
+        return fast
     ranged = df.repartitionByRange(num_partitions, *_order_cols(order_by))
     return ranged.withColumn(PID, F.spark_partition_id()).localCheckpoint(
         eager=False
@@ -346,7 +334,6 @@ def attach_row_number(
     out: str = "rn",
     total_out: str | None = None,
     num_partitions: int | None = None,
-    boundary_strategy: str = "auto",
 ) -> DataFrame:
     """Global 1-based row_number over ``order_by`` without a
     single-partition sort.
@@ -362,7 +349,7 @@ def attach_row_number(
     materializes it (checkpoint path).  Batch-only; a streaming input
     raises (see ``_with_range_pid``).
     """
-    ranged = _with_range_pid(df, order_by, num_partitions, boundary_strategy)
+    ranged = _with_range_pid(df, order_by, num_partitions)
 
     # Phase 1: partition-local row number — a *partitioned* window, so
     # every range partition ranks in parallel.
@@ -411,7 +398,6 @@ def attach_prefix_agg(
     total_out: str | None = None,
     num_partitions: int | None = None,
     allow_float: bool = False,
-    boundary_strategy: str = "auto",
 ) -> DataFrame:
     """Global running sum/max of ``value_col`` over ``order_by``.
 
@@ -450,7 +436,7 @@ def attach_prefix_agg(
                 "decimal/integer first or pass allow_float=True"
             )
 
-    ranged = _with_range_pid(df, order_by, num_partitions, boundary_strategy)
+    ranged = _with_range_pid(df, order_by, num_partitions)
 
     upper = 0 if inclusive else -1
     w_order = Window.partitionBy(PID).orderBy(*_order_cols(order_by))
@@ -559,7 +545,6 @@ def attach_ntile(
     n: int,
     out: str,
     num_partitions: int | None = None,
-    boundary_strategy: str = "auto",
 ) -> DataFrame:
     """Global ``NTILE(n)`` over ``order_by`` via the two-phase row
     number — exact, no single-partition sort.  NOT lazy / batch-only
@@ -571,7 +556,6 @@ def attach_ntile(
         out=rn_col,
         total_out=tot_col,
         num_partitions=num_partitions,
-        boundary_strategy=boundary_strategy,
     )
     return ranked.withColumn(
         out, ntile_from_rn(F.col(rn_col), F.col(tot_col), n)

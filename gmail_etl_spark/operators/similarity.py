@@ -13,8 +13,10 @@ double so results are bit-identical to any double-precision oracle.
 
 Each kernel exists once and every operator calls that copy: squared L2
 (:func:`_sq_dist`), nearest centroid over plan literals
-(:func:`_nearest`) and in numpy (:func:`_nearest_np`), the cosine verify
-join (:func:`_cosine_verify`), the per-batch Arrow cosine top-k
+(:func:`_nearest`) and in numpy (:func:`_nearest_np`), the IVF cell
+assignment kernel (:func:`_assign_cells`), the IVF probe rule
+(:func:`_nearest_cells`), the cosine verify join
+(:func:`_cosine_verify`), the per-batch Arrow cosine top-k
 (:func:`_cosine_topk_arrow`), the PQ/ADC search (:func:`_adc_search`)
 and the (score, id) top-k merge window (:func:`_rank_topk`).  The
 driver-side numpy distances (PQ training, LUTs, probe picks) stay in the
@@ -81,6 +83,43 @@ def _nearest_np(v, C):
     lowest-index tie-break as :func:`_nearest`."""
     d2 = (v * v).sum(axis=1)[:, None] - 2.0 * (v @ C.T) + (C * C).sum(axis=1)[None, :]
     return d2.argmin(axis=1)
+
+
+def _assign_cells(
+    base: DataFrame, centroids, out: str, keep_v: bool = False
+) -> DataFrame:
+    """``base``'s (id, v ARRAY<DOUBLE>) rows with ``out``, the index of
+    each row's nearest centroid: one :func:`_nearest_np` matmul per
+    Arrow batch, with the centroids in the kernel closure, so the plan
+    carries no centroid literals at any cell count.  No join, no
+    shuffle.  ``keep_v`` carries ``v`` through; without it the kernel
+    emits only (id, ``out``)."""
+    import numpy as np
+
+    C = np.asarray(centroids, dtype=np.float64)
+    cols = ["id", "v"] if keep_v else ["id"]
+
+    def kern(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            v = np.array(pdf["v"].tolist(), dtype=np.float64)
+            yield pdf[cols].assign(**{out: _nearest_np(v, C).astype("int32")})
+
+    fields = [f"{c} {base.schema[c].dataType.simpleString()}" for c in cols]
+    return base.mapInPandas(kern, ", ".join([*fields, f"{out} int"]))
+
+
+def _nearest_cells(C, v, nprobe: int):
+    """Row indices of the ``nprobe`` rows of ``C`` nearest ``v``, ordered
+    by (squared L2 rounded to 9 places, index): the probe rule of both
+    IVF searches (:func:`query_ivf_index` and :func:`ivf_pq_topk`).  The
+    rounding makes distances that differ only in summation order tie,
+    and ties go to the lowest index."""
+    import numpy as np
+
+    d2 = np.round(((C - v[None, :]) ** 2).sum(axis=1), 9)
+    return np.argsort(d2, kind="stable")[:nprobe]
 
 
 def _rank_topk(
@@ -427,8 +466,7 @@ def _cosine_topk_arrow(
     probed=None,
 ) -> DataFrame:
     """The per-batch Arrow cosine top-k behind
-    :func:`cosine_topk_vectorized` and ``query_ivf_index(
-    rank_strategy="vectorized")``.
+    :func:`cosine_topk_vectorized` and :func:`query_ivf_index`.
 
     ``q_ids``/``q_vecs`` is the collected query set, its ids of Spark
     type ``q_id_dt``.  ``probed`` (IVF only) is an (n_queries, n_cells)
@@ -558,62 +596,45 @@ def train_kmeans(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 3,
-    assign_strategy: str = "expr",
     exact_updates: bool = False,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Lloyd's k-means as a DataFrame iteration — the IVF coarse-quantizer
     trainer (q51's cell assignment, learned instead of given).
 
     Deterministic: centroids initialize from the k lowest-id vectors, and
-    every assignment argmin tie-breaks on cluster index (both strategies,
-    :func:`_nearest` and :func:`_nearest_np`, pick the lowest cluster
-    index on equal distance).
+    every assignment argmin tie-breaks on cluster index (both
+    :func:`_nearest` and :func:`_nearest_np` pick the lowest cluster
+    index on equal distance).  Corpus rows never shuffle.
 
-    ``assign_strategy``:
+    ``exact_updates`` names the trainer:
 
-    - ``"expr"`` (default, the oracled-query path): centroids are k×dim
-      literals compiled into the plan (a broadcast in spirit, no join),
-      assignment is a map-only argmin in whole-stage codegen, and the
-      recompute shuffles only k×dim partial (sum, count) pairs per
-      partition — corpus rows never shuffle.  The compiled plan is
-      O(k·dim) expression nodes, which is the right trade only while
-      k·dim stays small (tens of cells): past that, codegen size and
-      Catalyst analysis time blow up long before the data does.
-    - ``"vectorized"`` (the 100 TB form, for k in the hundreds+):
-      centroids are closed over by Arrow ``mapInPandas`` kernels — one
-      numpy matmul per corpus batch for assignment, and per-batch
+    - ``False`` (default): the numpy trainer.  Centroids are closed over
+      by Arrow ``mapInPandas`` kernels — one numpy matmul per corpus
+      batch for assignment (:func:`_assign_cells`), and per-batch
       sufficient statistics (cluster, count, sum-vector) collected to
       the driver for the centroid update (the :func:`pca_fit` pattern;
-      O(n_batches·k·dim) driver bytes, corpus-size-independent).
-      Corpus rows never shuffle on either path.
+      O(n_batches·k·dim) driver bytes, corpus-size-independent).  The
+      plan carries no centroid literals, so it stays the same size at
+      any k.
+    - ``True``: the oracle-replayable reference.  Centroids are k×dim
+      literals compiled into the plan, assignment is a map-only argmin
+      in whole-stage codegen (:func:`_nearest`), and the recompute
+      shuffles only k×dim partial (sum, count) pairs per partition.
+      Per-dim sums go through DECIMAL(20,12) (the q52 centroid
+      discipline) and the mean is one double division at the end, so
+      the trained centroids — and therefore every assignment — are a
+      pure data function, independent of partitioning, and exactly
+      replayable by a SQL oracle as chained per-iteration CTEs (how
+      q75/q110 are hash-oracled).  The plan is O(k·dim) expression
+      nodes, so this trainer suits tens of cells, not hundreds.
 
-    The two strategies compute the same argmin over the same distances
-    and are assignment-identical except where distances tie at float
-    rounding granularity (test-pinned on the planted corpus).
-
-    ``exact_updates=True`` (expr strategy only) makes the centroid
-    recompute accumulation-order-FREE: per-dim sums go through
-    DECIMAL(20,12) (the q52 centroid discipline) and the mean is one
-    double division at the end, so the trained centroids — and therefore
-    every assignment — are a pure data function, independent of
-    partitioning, and exactly replayable by a SQL oracle as chained
-    per-iteration CTEs (how q75/q110 are hash-oracled).  The default
-    float sums are kept for the throughput paths: decimal aggregation
-    measured ≈2× the codegen cost of double sums (r1 note), and ulp-level
-    centroid drift is irrelevant when the output feeds a recall-gated
-    ANN probe rather than an equality gate.
+    The two trainers compute the same argmin and agree on every
+    assignment except where distances tie at float rounding
+    granularity; their centroids agree up to summation order and the
+    decimal rounding of the sums (test-pinned).
 
     Returns (assignments DataFrame (id, cluster), final centroids).
     """
-    if assign_strategy not in ("expr", "vectorized"):
-        raise ValueError(
-            f"assign_strategy must be 'expr' or 'vectorized', got {assign_strategy!r}"
-        )
-    if exact_updates and assign_strategy != "expr":
-        raise ValueError(
-            "exact_updates requires assign_strategy='expr' (the vectorized "
-            "path accumulates float sufficient statistics per batch)"
-        )
     dim_rows = (
         corpus.orderBy(id_col)
         .limit(k)
@@ -624,21 +645,21 @@ def train_kmeans(
     base = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    if assign_strategy == "vectorized":
-        return _train_kmeans_vectorized(base, centroids, iters, corpus, id_col)
+    if not exact_updates:
+        return _train_kmeans_vectorized(base, centroids, iters)
 
     def _assign(cents: list[list[float]]):
         return base.withColumn("cluster", _nearest(F.col("v"), cents))
 
-    sum_col = (
-        F.sum(F.col("val").cast("decimal(20,12)")) if exact_updates else F.sum("val")
-    )
     for _ in range(iters):
         assigned = _assign(centroids)
         stats = (
             assigned.select("cluster", F.posexplode("v").alias("dim", "val"))
             .groupBy("cluster", "dim")
-            .agg(sum_col.alias("s"), F.count(F.lit(1)).alias("n"))
+            .agg(
+                F.sum(F.col("val").cast("decimal(20,12)")).alias("s"),
+                F.count(F.lit(1)).alias("n"),
+            )
             .collect()
         )
         new_c = [list(c) for c in centroids]  # empty clusters keep position
@@ -657,31 +678,12 @@ def _train_kmeans_vectorized(
     base: DataFrame,
     centroids: list[list[float]],
     iters: int,
-    corpus: DataFrame,
-    id_col: str,
 ) -> tuple[DataFrame, list[list[float]]]:
-    """The ``assign_strategy="vectorized"`` body of :func:`train_kmeans`
-    — see its docstring for the contract.  ``base`` is the normalized
-    (id, v array<double>) projection; ``corpus``/``id_col`` are only
-    needed to carry the id dtype through the Arrow kernel schema."""
+    """The ``exact_updates=False`` body of :func:`train_kmeans` — see its
+    docstring for the contract.  ``base`` is the normalized
+    (id, v array<double>) projection."""
     import numpy as np
     import pandas as pd
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-
-    def _assign_vec(cents: list[list[float]]) -> DataFrame:
-        C = np.array(cents, dtype=np.float64)
-
-        def kern(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                v = np.array(pdf["v"].tolist(), dtype=np.float64)
-                yield pd.DataFrame(
-                    {"id": pdf["id"], "cluster": _nearest_np(v, C).astype("int32")}
-                )
-
-        return base.mapInPandas(kern, f"id {id_type}, cluster int")
 
     def _partial_stats(cents: list[list[float]]) -> DataFrame:
         C = np.array(cents, dtype=np.float64)
@@ -725,7 +727,7 @@ def _train_kmeans_vectorized(
         for ci, s in sums.items():
             new_c[ci] = (s / counts[ci]).tolist()
         centroids = new_c
-    return _assign_vec(centroids).select("id", "cluster"), centroids
+    return _assign_cells(base, centroids, "cluster"), centroids
 
 
 def semantic_dedup(
@@ -735,7 +737,6 @@ def semantic_dedup(
     k: int = 8,
     iters: int = 3,
     threshold: float = 0.995,
-    assign_strategy: str = "expr",
     exact_updates: bool = False,
 ) -> DataFrame:
     """SemDeDup-shaped semantic deduplication: partition the embedding
@@ -747,7 +748,7 @@ def semantic_dedup(
     Scale shape: pairwise comparison happens only WITHIN a k-means cell
     (the SemDeDup observation — semantic duplicates land in the same
     cell), so cost is sum over cells of |cell|^2, never corpus^2; raise
-    k so cells stay bounded (``assign_strategy="vectorized"`` keeps the
+    k so cells stay bounded (the default numpy trainer keeps the
     quantizer viable at the hundreds of cells that implies — see
     :func:`train_kmeans`; ``exact_updates`` passes through for the
     oracle-replayable trainer).  Candidate ids expand from ONE shuffle of
@@ -759,8 +760,7 @@ def semantic_dedup(
     from gmail_etl_spark.operators.dedup import near_dedup
 
     assign, _ = train_kmeans(
-        corpus, id_col, vec_col, k=k, iters=iters,
-        assign_strategy=assign_strategy, exact_updates=exact_updates,
+        corpus, id_col, vec_col, k=k, iters=iters, exact_updates=exact_updates
     )
     ids = assign.select(F.col("cluster"), F.col("id"))
     candidates = (
@@ -913,7 +913,6 @@ def ivf_pq_topk(
     k: int = 5,
     nprobe: int = 2,
     rerank: int = 5,
-    assign_strategy: str = "expr",
 ) -> DataFrame:
     """IVFADC (Jégou et al. 2011): the full big-ANN search architecture —
     an IVF coarse quantizer prunes the corpus to each query's ``nprobe``
@@ -921,12 +920,10 @@ def ivf_pq_topk(
     a ``k * rerank`` shortlist.  Compose with :func:`train_kmeans` (the
     cell centroids) and :func:`train_pq` (the codebooks).
 
-    Scale shape: cell assignment is a map-only argmin — over centroid
-    literals by default, or inside a numpy/Arrow kernel with
-    ``assign_strategy="vectorized"`` (identical assignments by test;
-    the large-cell-count form, zero plan literals — see
-    :func:`train_kmeans`); either way no join, no shuffle; the ADC
-    kernel skips every row
+    Scale shape: cell assignment is a map-only numpy argmin
+    (:func:`_assign_cells`: zero plan literals, no join, no shuffle);
+    each query probes its ``nprobe`` nearest cells by the rule of
+    :func:`_nearest_cells`; the ADC kernel skips every row
     outside the query's probed cells, so scan cost per query drops by
     ~k_cells/nprobe; per-batch partial top-k bounds the merge shuffle at
     O(n_batches · k·rerank · n_queries); the re-rank pass broadcasts the
@@ -934,42 +931,10 @@ def ivf_pq_topk(
     BY cell so probing prunes parquet partitions instead of filtering
     rows — the plan shape here is the in-memory form of that layout.
     Returns (query_id, neighbor_id, adist, dist, rank)."""
-    import numpy as np
-    import pandas as pd
-
-    if assign_strategy not in ("expr", "vectorized"):
-        raise ValueError(
-            f"assign_strategy must be 'expr' or 'vectorized', got {assign_strategy!r}"
-        )
     base = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    if assign_strategy == "vectorized":
-        # large-k form (same trade as train_kmeans's vectorized path):
-        # centroids in a kernel closure, one matmul per Arrow batch,
-        # zero plan literals
-        C_cells = np.asarray(centroids, dtype=np.float64)
-        corpus_id_type = corpus.schema[id_col].dataType.simpleString()
-
-        def _cell_kern(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                v = np.array(pdf["v"].tolist(), dtype=np.float64)
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"],
-                        "v": pdf["v"],
-                        "cell": _nearest_np(v, C_cells).astype("int32"),
-                    }
-                )
-
-        with_cell = base.mapInPandas(
-            _cell_kern, f"id {corpus_id_type}, v array<double>, cell int"
-        )
-    else:
-        # map-only cell assignment compiled from centroid literals
-        with_cell = base.withColumn("cell", _nearest(F.col("v"), centroids))
+    with_cell = _assign_cells(base, centroids, "cell", keep_v=True)
     # cell rides along through the encode projection: no join, no shuffle
     enc = pq_encode(with_cell, codebooks, "id", "v", keep_cols=("cell",))
     return _adc_search(
@@ -1027,11 +992,7 @@ def _adc_search(
     if centroids is not None:
         cents = np.asarray(centroids, dtype=np.float64)
         probed = _probed_cells(
-            [
-                np.argsort(((cents - v[None, :]) ** 2).sum(axis=1), kind="stable")[:nprobe]
-                for v in q_vecs
-            ],
-            len(centroids),
+            [_nearest_cells(cents, v, nprobe) for v in q_vecs], len(centroids)
         )
     kk = k * rerank
 
@@ -1214,7 +1175,6 @@ def save_ivf_index(
     vec_col: str = "embedding",
     k_cells: int = 8,
     iters: int = 3,
-    assign_strategy: str = "expr",
     exact_updates: bool = False,
 ) -> None:
     """Materialize an IVF index as a TABLE: train the coarse quantizer
@@ -1234,7 +1194,6 @@ def save_ivf_index(
         vec_col=vec_col,
         k=k_cells,
         iters=iters,
-        assign_strategy=assign_strategy,
         exact_updates=exact_updates,
     )
     indexed = corpus.join(
@@ -1261,158 +1220,66 @@ def query_ivf_index(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe_strategy: str = "expr",
-    rank_strategy: str = "expr",
     max_queries: int | None = 1024,
 ) -> DataFrame:
     """Query the persisted index: assign each query to its ``nprobe``
     nearest centroids, scan ONLY the probed partitions (`cluster IN
     (...)` reaches the reader as a partition filter), and rank exact
-    cosine within the per-query probed cells under the (sim DESC, id)
-    total order.  The collected probe set is bounded by k_cells — the
-    same bounded-scalar contract as the query set itself.  Results are
-    identical to running the same nprobe IVF search in one job; the
-    test asserts it row-for-row.
+    cosine within the per-query probed cells under the (sim rounded to
+    6 DESC, neighbor id) total order.  Results are identical to running
+    the same nprobe IVF search in one job; the test asserts it
+    row-for-row.
 
-    ``probe_strategy`` mirrors :func:`train_kmeans`'s
-    ``assign_strategy``: ``"expr"`` (default) compiles the centroids
-    into the plan as k_cells×dim literals — right while the cell count
-    is small; ``"vectorized"`` collects the (small-by-contract) query
-    set, picks each query's ``nprobe`` cells with one numpy matmul on
-    the driver, and re-enters the plan as a q×nprobe-row DataFrame —
-    the probe step carries zero centroid literals, so plan size is
-    independent of k_cells.  Both order probes by (distance rounded to
-    9 places, cell id), so the probed cells are identical.
+    The query set is small by contract: it is collected once, and each
+    query's ``nprobe`` cells are picked on the driver by the rule of
+    :func:`_nearest_cells` — (distance rounded to 9 places, cell id) —
+    so the plan carries no centroid literals at any cell count.  The
+    ranking is :func:`cosine_topk_vectorized`'s Arrow kernel over the
+    probed scan, with each query's probed cells as its candidate mask:
+    one numpy matmul per probed Arrow batch with per-batch partial
+    top-k, so the probed scan's byte savings are not given back as
+    per-row expression overhead at wide dims.
 
-    ``rank_strategy`` picks the within-cell ranking kernel over the
-    SAME candidate set (probed cells minus the query itself, under the
-    (sim rounded to 6 DESC, neighbor id) total order, row-identical by
-    test): ``"expr"`` (default) joins queries to probed vectors and
-    ranks with the codegen cosine; ``"vectorized"`` runs
-    :func:`cosine_topk_vectorized`'s Arrow kernel over the probed scan,
-    with each query's probed cells as its candidate mask — one numpy
-    matmul per probed Arrow batch with per-batch partial top-k, so the
-    probed scan's byte savings are not given back as per-row expression
-    overhead at wide dims.  ``"auto"`` routes on the measured crossover (DEVNOTES):
-    once the per-query probe sets union to ~the whole cell space
-    (``n_queries × nprobe >= k_cells``), the join path materializes
-    nearly query×corpus candidate rows and the matmul kernel wins;
-    below it, partition pruning dominates and the join path wins.
-
-    ``max_queries`` enforces the bounded-queries contract: both
-    vectorized paths COLLECT the query set to the driver, so a caller
-    accidentally passing a corpus-sized frame must fail loudly (raise),
-    never silently collect — the check is a ``limit(max_queries+1)``
-    count, so it costs O(max_queries) rows even on an unbounded input.
+    ``max_queries`` enforces the bounded-queries contract: a caller
+    accidentally passing a corpus-sized frame fails loudly (raise)
+    instead of collecting it.  The collect is a ``limit(max_queries+1)``,
+    so it costs O(max_queries) rows even on an unbounded input.
     ``None`` disables the guard (caller takes responsibility)."""
-    if probe_strategy not in ("expr", "vectorized"):
-        raise ValueError(
-            f"probe_strategy must be 'expr' or 'vectorized', got {probe_strategy!r}"
-        )
-    if rank_strategy not in ("expr", "vectorized", "auto"):
-        raise ValueError(
-            "rank_strategy must be 'expr', 'vectorized' or 'auto', "
-            f"got {rank_strategy!r}"
-        )
+    import numpy as np
+
     cents = sorted(
         (r["cluster"], list(r["centroid"]))
         for r in spark.read.parquet(f"{path}/centroids").collect()
     )
-    n_q: int | None = None
-    if probe_strategy == "vectorized" or rank_strategy in ("vectorized", "auto"):
-        cap = max_queries if max_queries is not None else 1_000_000
-        n_q = queries.limit(cap + 1).count()
-    if rank_strategy == "auto":
-        rank_strategy = "vectorized" if n_q * nprobe >= len(cents) else "expr"
-    if (
-        max_queries is not None
-        and n_q is not None
-        and n_q > max_queries
-        and (probe_strategy == "vectorized" or rank_strategy == "vectorized")
-    ):
-        raise ValueError(
-            f"query_ivf_index: query set has >{max_queries} rows but a "
-            "vectorized strategy collects queries to the driver — pass a "
-            "bounded query frame, raise max_queries explicitly, or use "
-            "probe_strategy='expr', rank_strategy='expr' (fully "
-            "distributed, no collect)"
-        )
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("q_vec"),
     )
-    if probe_strategy == "vectorized":
-        import numpy as np
-
-        q_id_type = queries.schema[id_col].dataType.simpleString()
-        q_rows = q.collect()
-        cell_ids = np.array([ci for ci, _ in cents], dtype=np.int64)
-        C = np.array([c for _, c in cents], dtype=np.float64)
-        probe_rows = []
-        for r in q_rows:
-            v = np.array(r["q_vec"], dtype=np.float64)
-            d2 = np.round(((C - v[None, :]) ** 2).sum(axis=1), 9)
-            # (rounded distance, cell id) ascending — the expr path's
-            # array_sort(struct(d, cell)) order, so probes match exactly
-            order = np.lexsort((cell_ids, d2))[:nprobe]
-            for ci in cell_ids[order]:
-                probe_rows.append((r["query_id"], list(r["q_vec"]), int(ci)))
-        scored_cells = spark.createDataFrame(
-            probe_rows,
-            f"query_id {q_id_type}, q_vec array<double>, cluster int",
+    q_rows = (q if max_queries is None else q.limit(max_queries + 1)).collect()
+    if max_queries is not None and len(q_rows) > max_queries:
+        raise ValueError(
+            f"query_ivf_index: query set has >{max_queries} rows, and the "
+            "queries are collected to the driver — pass a bounded query "
+            "frame, or raise max_queries explicitly"
         )
-    else:
-        scored_cells = q.select(
-            "query_id",
-            "q_vec",
-            F.slice(
-                F.array_sort(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.round(_sq_dist(F.col("q_vec"), _lit_vec(c)), 9).alias("d"),
-                                F.lit(ci).alias("cell"),
-                            )
-                            for ci, c in cents
-                        ]
-                    )
-                ),
-                1,
-                nprobe,
-            ).alias("probes"),
-        ).select(
-            "query_id", "q_vec", F.explode("probes.cell").alias("cluster")
-        )
-    probe_set = sorted(
-        {r["cluster"] for r in scored_cells.select("cluster").distinct().collect()}
-    )
+    cell_ids = np.array([ci for ci, _ in cents], dtype=np.int64)
+    C = np.array([c for _, c in cents], dtype=np.float64)
+    probes = [
+        cell_ids[_nearest_cells(C, np.asarray(r["q_vec"], dtype=np.float64), nprobe)]
+        for r in q_rows
+    ]
+    probe_set = sorted({int(c) for cells in probes for c in cells})
     vectors = spark.read.parquet(f"{path}/vectors").filter(
         F.col("cluster").isin(probe_set)
     )
-    if rank_strategy == "vectorized":
-        per_q: dict = {}
-        for r in scored_cells.collect():  # bounded: q × nprobe rows
-            per_q.setdefault(r["query_id"], (r["q_vec"], set()))[1].add(r["cluster"])
-        # same candidate set as the join path: rows in a query's probed cells
-        return _cosine_topk_arrow(
-            vectors,
-            id_col,
-            vec_col,
-            k,
-            queries.schema[id_col].dataType,
-            list(per_q),
-            [v for v, _ in per_q.values()],
-            # ``vectors`` holds only probe_set cells
-            _probed_cells([c for _, c in per_q.values()], max(probe_set, default=-1) + 1),
-        )
-
-    joined = scored_cells.join(vectors, "cluster").filter(
-        F.col("query_id") != F.col(id_col)
-    )
-    sim = F.round(cosine(F.col("q_vec"), F.col(vec_col)), 6)
-    return _rank_topk(
-        joined.select("query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim")),
+    return _cosine_topk_arrow(
+        vectors,
+        id_col,
+        vec_col,
         k,
-        "sim",
+        queries.schema[id_col].dataType,
+        [r["query_id"] for r in q_rows],
+        [r["q_vec"] for r in q_rows],
+        # ``vectors`` holds only probe_set cells
+        _probed_cells(probes, max(probe_set, default=-1) + 1),
     )

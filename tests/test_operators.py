@@ -546,8 +546,8 @@ def test_vectorized_knn_rejects_null_and_ragged_vectors(spark, tmp_path):
     must raise a clear error from the Arrow kernel, never silently
     misalign the reshaped matrix (the failure mode: total element count
     still divides num_rows and every following row shifts).  The IVF
-    index's vectorized ranking runs the same kernel, so a hand-built
-    one-cell index holding such vectors raises the same errors."""
+    index's ranking runs the same kernel, so a hand-built one-cell
+    index holding such vectors raises the same errors."""
     from pyspark.errors.exceptions.captured import PythonException
 
     from gmail_etl_spark.operators.similarity import (
@@ -567,9 +567,7 @@ def test_vectorized_knn_rejects_null_and_ragged_vectors(spark, tmp_path):
         spark.createDataFrame(
             [(0, [1.0, 0.0])], "cluster int, centroid array<double>"
         ).write.parquet(f"{path}/centroids")
-        return query_ivf_index(
-            spark, path, queries, k=2, nprobe=1, rank_strategy="vectorized"
-        )
+        return query_ivf_index(spark, path, queries, k=2, nprobe=1)
 
     null_vec = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0])],
@@ -1434,36 +1432,36 @@ def test_kmeans_trainer_properties(spark):
 
 
 def test_kmeans_vectorized_matches_expr(spark):
-    """The numpy/Arrow assignment path (the large-k form: centroids in
-    kernel closures, not k×dim plan literals) produces the same
-    assignments and centroids as the codegen expr path — same argmin,
-    same lowest-cluster tie-break, sufficient-statistics update."""
+    """The numpy trainer (the default: centroids in kernel closures, not
+    k×dim plan literals) produces the same assignments as the
+    literal-argmin reference trainer (``exact_updates=True``), and
+    centroids equal up to float accumulation and decimal rounding —
+    same argmin, same lowest-cluster tie-break, same update."""
     import math
 
     from gmail_etl_spark.operators.similarity import train_kmeans
     from gmail_etl_spark.synthetic import planted_embedding_corpus
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    a_expr, c_expr = train_kmeans(emb, k=5, iters=3, assign_strategy="expr")
-    a_vec, c_vec = train_kmeans(emb, k=5, iters=3, assign_strategy="vectorized")
+    a_expr, c_expr = train_kmeans(emb, k=5, iters=3, exact_updates=True)
+    a_vec, c_vec = train_kmeans(emb, k=5, iters=3)
     for u, v in zip(c_expr, c_vec):
         for x, y in zip(u, v):
-            # centroid sums run in different orders (shuffle-order fold
-            # vs numpy pairwise) — equal to float accumulation noise
+            # the reference sums exactly in DECIMAL(20,12), the numpy
+            # trainer in doubles per batch — equal up to float
+            # accumulation and decimal rounding
             assert math.isclose(x, y, rel_tol=1e-9, abs_tol=1e-12)
     de = {r["id"]: r["cluster"] for r in a_expr.collect()}
     dv = {r["id"]: r["cluster"] for r in a_vec.collect()}
     assert de == dv and len(de) == emb.count()
 
     # large-k smoke on the planted corpus: every vector lands in the
-    # cell seeded by its planted center (k > any size the expr path's
-    # O(k·dim)-literal plan could carry)
+    # cell seeded by its planted center (k > any size the reference
+    # trainer's O(k·dim)-literal plan could carry)
     from pyspark.sql import functions as F
 
     corpus = planted_embedding_corpus(spark, 4000, dim=16, n_centers=64)
-    assign, cents = train_kmeans(
-        corpus, k=64, iters=2, assign_strategy="vectorized"
-    )
+    assign, cents = train_kmeans(corpus, k=64, iters=2)
     agree = (
         assign.join(corpus, assign["id"] == corpus["vec_id"])
         .filter(F.col("cluster") == F.col("center"))
@@ -1471,11 +1469,6 @@ def test_kmeans_vectorized_matches_expr(spark):
     )
     assert agree == 4000
     assert len(cents) == 64
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        train_kmeans(emb, k=5, iters=1, assign_strategy="bogus")
 
 
 def test_wav_decode_features_and_degrade():
@@ -1658,20 +1651,23 @@ def test_ivf_pq_recall_vs_exact(spark):
     mean_recall = sum(recalls) / len(recalls)
     assert mean_recall >= 0.4, f"IVFADC recall@10 too low: {mean_recall}"
 
-    # vectorized cell assignment (numpy kernel, zero centroid literals)
-    # returns row-identical results to the literal-compiled default
-    approx_v = ivf_pq_topk(
-        queries, emb, books, centroids, k=10, nprobe=4, rerank=5,
-        assign_strategy="vectorized",
+    # the numpy cell assignment (zero centroid literals) returns
+    # row-identical results to a literal-compiled cell assignment
+    # (``_nearest`` over centroid literals) feeding the same search
+    from gmail_etl_spark.operators.similarity import (
+        _adc_search,
+        _nearest,
+        pq_encode,
+    )
+
+    with_cell = emb.select(
+        F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v")
+    ).withColumn("cell", _nearest(F.col("v"), centroids))
+    enc = pq_encode(with_cell, books, "id", "v", keep_cols=("cell",))
+    approx_lit = _adc_search(
+        queries, emb, enc, books, "vec_id", "embedding", 10, 5, centroids, 4
     ).collect()
-    assert sorted(map(tuple, approx_v)) == sorted(map(tuple, approx))
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        ivf_pq_topk(
-            queries, emb, books, centroids, assign_strategy="bogus"
-        )
+    assert sorted(map(tuple, approx_lit)) == sorted(map(tuple, approx))
 
 
 def test_dhash_planted_near_dups(spark):
@@ -2011,16 +2007,64 @@ def test_q191_cube_merge_equals_direct_sketches(spark):
     assert abs(int(tot.approx_users.iloc[0]) - truth) <= max(2, 0.02 * truth)
 
 
+def _ivf_literal_reference(queries, base, centroids, k, nprobe):
+    """The nprobe IVF search as one plan, built from plan literals: each
+    query probes its ``nprobe`` nearest centroids by (squared L2
+    rounded to 9 places, cell id), joins ``base`` (vec_id, v, cluster)
+    on the probed cells and ranks exact cosine under (sim rounded to 6
+    DESC, neighbor id).  Returns (query_id, neighbor_id, sim, rank)."""
+    from pyspark.sql import Window as W
+
+    from gmail_etl_spark.operators.similarity import cosine
+
+    def dist2(vec, c):
+        return F.aggregate(
+            F.zip_with(vec, F.array(*[F.lit(x) for x in c]),
+                       lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0), lambda acc, d: acc + d)
+
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("q_vec"))
+    probes = q.select(
+        "query_id", "q_vec",
+        F.explode(F.slice(F.array_sort(F.array(*[
+            F.struct(F.round(dist2(F.col("q_vec"), c), 9).alias("d"),
+                     F.lit(i).alias("cell"))
+            for i, c in enumerate(centroids)])), 1, nprobe)["cell"].alias("cells")
+        ).alias("cluster"))
+    joined = probes.join(base, "cluster").filter(
+        F.col("query_id") != F.col("vec_id"))
+    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
+    return (joined.select("query_id", F.col("vec_id").alias("neighbor_id"),
+                          F.round(cosine(F.col("q_vec"), F.col("v")), 6).alias("sim"))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
+def _persisted_ivf_reference(spark, path, queries, k, nprobe):
+    """:func:`_ivf_literal_reference` over a persisted index's own
+    centroids and cell-partitioned vectors, as sorted row tuples."""
+    centroids = [
+        list(r["centroid"])
+        for r in spark.read.parquet(f"{path}/centroids").orderBy("cluster").collect()
+    ]
+    base = spark.read.parquet(f"{path}/vectors").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v"), "cluster"
+    )
+    return sorted(
+        map(tuple, _ivf_literal_reference(queries, base, centroids, k, nprobe).collect())
+    )
+
+
 def test_persisted_ivf_index_roundtrip(spark, tmp_path):
     """save_ivf_index → query_ivf_index: results must equal the same
     nprobe IVF search computed directly (train + assign + rank in one
     job), and the probe scan must prune partitions (PartitionFilters on
     cluster), proving the layout IS the index."""
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
     from gmail_etl_spark.operators.similarity import (
-        cosine,
         query_ivf_index,
         save_ivf_index,
         train_kmeans,
@@ -2043,30 +2087,7 @@ def test_persisted_ivf_index_roundtrip(spark, tmp_path):
         emb["vec_id"], emb["embedding"].cast("array<double>").alias("v"),
         assignments["cluster"],
     )
-
-    def dist2(vec, c):
-        return F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(x) for x in c]),
-                       lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, d: acc + d)
-
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("q_vec"))
-    probes = q.select(
-        "query_id", "q_vec",
-        F.explode(F.slice(F.array_sort(F.array(*[
-            F.struct(F.round(dist2(F.col("q_vec"), c), 9).alias("d"),
-                     F.lit(i).alias("cell"))
-            for i, c in enumerate(centroids)])), 1, 2)["cell"].alias("cells")
-        ).alias("cluster"))
-    joined = probes.join(base, "cluster").filter(
-        F.col("query_id") != F.col("vec_id"))
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    exp_df = (joined.select("query_id", F.col("vec_id").alias("neighbor_id"),
-                            F.round(cosine(F.col("q_vec"), F.col("v")), 6).alias("sim"))
-              .withColumn("rank", F.row_number().over(w))
-              .filter(F.col("rank") <= 3))
+    exp_df = _ivf_literal_reference(queries, base, centroids, k=3, nprobe=2)
     exp = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["sim"])
            for r in exp_df.collect()}
     assert got == exp and len(got) == 18
@@ -2080,10 +2101,11 @@ def test_persisted_ivf_index_roundtrip(spark, tmp_path):
 
 
 def test_query_ivf_probe_strategies_identical(spark, tmp_path):
-    """probe_strategy='vectorized' (driver-side numpy cell pick, zero
-    centroid literals in the plan) returns row-identical results to the
-    default expr probe — same (rounded distance, cell) probe order."""
-    import pytest
+    """query_ivf_index (driver-side numpy cell pick, zero centroid
+    literals in the plan, Arrow ranking kernel under each query's probed
+    cells) returns row-identical results to the literal probe + join
+    reference — same (rounded distance, cell) probe order, same
+    candidate set, same (sim, id) ranking."""
     from pyspark.sql import functions as F
 
     from gmail_etl_spark.operators.similarity import (
@@ -2096,52 +2118,36 @@ def test_query_ivf_probe_strategies_identical(spark, tmp_path):
         "vec_id", "embedding"
     )
     path = str(tmp_path / "ivf_probe")
-    save_ivf_index(
-        spark, emb, path, k_cells=12, iters=2, assign_strategy="vectorized"
-    )
+    save_ivf_index(spark, emb, path, k_cells=12, iters=2)
     queries = emb.filter(F.col("vec_id") % 250 == 0)
-    got_e = query_ivf_index(
-        spark, path, queries, k=4, nprobe=3, probe_strategy="expr"
+    rows = sorted(
+        map(tuple, query_ivf_index(spark, path, queries, k=4, nprobe=3).collect())
     )
-    got_v = query_ivf_index(
-        spark, path, queries, k=4, nprobe=3, probe_strategy="vectorized"
-    )
-    rows_e = sorted(map(tuple, got_e.collect()))
-    rows_v = sorted(map(tuple, got_v.collect()))
-    assert rows_e == rows_v and len(rows_e) == queries.count() * 4
+    assert rows == _persisted_ivf_reference(spark, path, queries, k=4, nprobe=3)
+    assert len(rows) == queries.count() * 4
 
-    # the numpy within-cell ranking kernel returns the same rows as the
-    # join/codegen ranking over the same probed candidate set
-    got_r = query_ivf_index(
-        spark, path, queries, k=4, nprobe=3,
-        probe_strategy="vectorized", rank_strategy="vectorized",
-    )
-    rows_r = sorted(map(tuple, got_r.collect()))
-    assert rows_r == rows_e
-
-    # empty query set degrades to an empty frame on both rank paths
+    # empty query set degrades to an empty frame
     none = queries.limit(0)
-    assert query_ivf_index(
-        spark, path, none, k=4, nprobe=3, rank_strategy="vectorized"
-    ).count() == 0
     assert query_ivf_index(spark, path, none, k=4, nprobe=3).count() == 0
 
-    with pytest.raises(ValueError):
-        query_ivf_index(spark, path, queries, probe_strategy="bogus")
-    with pytest.raises(ValueError):
-        query_ivf_index(spark, path, queries, rank_strategy="bogus")
+
+#: Spark jobs of one ``query_ivf_index(...).collect()`` on the 2,000-vector,
+#: 12-cell index with 5 queries below: the centroids' schema inference and
+#: collect, the queries' one bounded collect (their generator's shuffle,
+#: then the limit), the vectors' schema inference and the ranking's two
+#: stages.  Evaluating the probe plan a second time adds jobs.
+QUERY_IVF_JOBS = 7
 
 
 def test_query_ivf_bounded_queries_guard_and_auto_route(spark, tmp_path):
-    """VERDICT r6 #4/#5.  (a) The vectorized paths collect the query
-    set to the driver 'small by contract' — the contract is now
-    ENFORCED: a corpus-sized query frame raises instead of silently
-    collecting, and the check itself is bounded (limit(max+1) count).
-    (b) rank_strategy='auto' encodes the measured DEVNOTES crossover:
-    queries×nprobe >= k_cells → the probe sets union to ~every cell, so
-    the matmul kernel wins and auto picks it; below the crossover the
-    pruned join wins and auto picks expr.  Both routes must stay
-    row-identical to the explicit strategies."""
+    """VERDICT r6 #4/#5.  (a) query_ivf_index collects the query set to
+    the driver 'small by contract' — the contract is ENFORCED: a query
+    frame over ``max_queries`` raises instead of silently collecting,
+    default arguments included, and the check itself is bounded
+    (limit(max+1) collect).  (b) Every query set runs the Arrow ranking
+    kernel and returns the literal probe + join reference's rows.
+    (c) One call runs a fixed number of Spark jobs, so a second
+    evaluation of the probe or the queries cannot creep back in."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -2155,46 +2161,23 @@ def test_query_ivf_bounded_queries_guard_and_auto_route(spark, tmp_path):
         "vec_id", "embedding"
     )
     path = str(tmp_path / "ivf_guard")
-    save_ivf_index(
-        spark, emb, path, k_cells=12, iters=2, assign_strategy="vectorized"
-    )
+    save_ivf_index(spark, emb, path, k_cells=12, iters=2)
 
-    # (a) guard: corpus-sized query frame + any vectorized strategy → raise
-    for kwargs in (
-        {"rank_strategy": "vectorized"},
-        {"probe_strategy": "vectorized"},
-    ):
-        with pytest.raises(ValueError, match="query set has >"):
-            query_ivf_index(
-                spark, path, emb, k=3, nprobe=2, max_queries=50, **kwargs
-            )
-    # fully-distributed expr/expr never collects queries — no guard
-    n = query_ivf_index(
-        spark,
-        path,
-        emb.filter(F.col("vec_id") < 60),
-        k=3,
-        nprobe=2,
-        max_queries=50,
-    ).count()
-    assert n == 60 * 3
+    # (a) guard: over max_queries → raise, the default 1,024 included
+    q60 = emb.filter(F.col("vec_id") < 60)
+    with pytest.raises(ValueError, match="query set has >"):
+        query_ivf_index(spark, path, emb, k=3, nprobe=2)
+    with pytest.raises(ValueError, match="query set has >"):
+        query_ivf_index(spark, path, q60, k=3, nprobe=2, max_queries=50)
     # max_queries=None disables the guard
     assert (
-        query_ivf_index(
-            spark,
-            path,
-            emb.filter(F.col("vec_id") < 60),
-            k=3,
-            nprobe=2,
-            rank_strategy="vectorized",
-            max_queries=None,
-        ).count()
+        query_ivf_index(spark, path, q60, k=3, nprobe=2, max_queries=None).count()
         == 60 * 3
     )
 
-    # (b) auto-routing: 2 queries × nprobe 3 = 6 < 12 cells → expr path
-    # (no python kernel in the plan); 5 × 3 = 15 >= 12 → the Arrow
-    # matmul kernel.
+    # (b) below and above the old auto-route crossover (2 × nprobe 3 <
+    # 12 cells <= 5 × 3) the plan runs the Arrow matmul kernel and the
+    # rows equal the reference's
     def plan_of(df) -> str:
         return df._jdf.queryExecution().explainString(
             df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -2202,29 +2185,25 @@ def test_query_ivf_bounded_queries_guard_and_auto_route(spark, tmp_path):
             )
         )
 
-    q_small = emb.filter(F.col("vec_id") < 2)
-    q_large = emb.filter(F.col("vec_id") < 5)
-    auto_small = query_ivf_index(
-        spark, path, q_small, k=4, nprobe=3, rank_strategy="auto"
-    )
-    auto_large = query_ivf_index(
-        spark, path, q_large, k=4, nprobe=3, rank_strategy="auto"
-    )
-    assert "MapInArrow" not in plan_of(auto_small)
-    assert "MapInArrow" in plan_of(auto_large)
-    # both routes return the explicit-strategy answer, row for row
-    exp_small = query_ivf_index(
-        spark, path, q_small, k=4, nprobe=3, rank_strategy="expr"
-    )
-    exp_large = query_ivf_index(
-        spark, path, q_large, k=4, nprobe=3, rank_strategy="expr"
-    )
-    assert sorted(map(tuple, auto_small.collect())) == sorted(
-        map(tuple, exp_small.collect())
-    )
-    assert sorted(map(tuple, auto_large.collect())) == sorted(
-        map(tuple, exp_large.collect())
-    )
+    for q in (emb.filter(F.col("vec_id") < 2), emb.filter(F.col("vec_id") < 5)):
+        got = query_ivf_index(spark, path, q, k=4, nprobe=3)
+        assert "MapInArrow" in plan_of(got)
+        assert sorted(map(tuple, got.collect())) == _persisted_ivf_reference(
+            spark, path, q, k=4, nprobe=3
+        )
+
+    # (c) Spark jobs of one build + collect on 5 queries
+    sc = spark.sparkContext
+    group = "test_query_ivf_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        rows = query_ivf_index(
+            spark, path, emb.filter(F.col("vec_id") < 5), k=4, nprobe=3
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 5 * 4
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == QUERY_IVF_JOBS
 
 
 def test_minhash_verify_strategy_independence(spark):

@@ -5,9 +5,7 @@ against IVF index build + probed query, and report recall@k vs exact.
 Mirrors tools/near_dedup_scale.py's role for the similarity-search
 surface: same synthetic corpus module (gmail_etl_spark/synthetic.py),
 so the per-decade scaling shape (100k -> 1M -> ...) stays comparable
-round over round.  Uses the vectorized (numpy-kernel) strategies for
-quantizer training and probe assignment — the large-k forms whose plan
-size is independent of the cell count.
+round over round.
 
 Ground truth is structural: the corpus plants n_cells well-separated
 centers and vector i belongs to center (i mod n_cells), so quantizer
@@ -82,17 +80,12 @@ def main() -> None:
         truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     print(f"exact top-{args.k}: {nq} queries in {t_exact:.1f}s", flush=True)
 
-    # IVF build (vectorized quantizer) + planted-agreement audit
+    # IVF build + planted-agreement audit
     path = tempfile.mkdtemp(prefix="ann_scale_") + "/ivf"
     t0 = time.time()
-    save_ivf_index(
-        spark, corpus, path, k_cells=args.cells, iters=args.iters,
-        assign_strategy="vectorized",
-    )
+    save_ivf_index(spark, corpus, path, k_cells=args.cells, iters=args.iters)
     t_build = time.time() - t0
-    assign, _ = train_kmeans(
-        corpus, k=args.cells, iters=args.iters, assign_strategy="vectorized"
-    )
+    assign, _ = train_kmeans(corpus, k=args.cells, iters=args.iters)
     agree = (
         assign.join(corpus_full, assign["id"] == corpus_full["vec_id"])
         .filter(F.col("cluster") == F.col("center"))
@@ -107,10 +100,7 @@ def main() -> None:
     # probed query
     t0 = time.time()
     got = (
-        query_ivf_index(
-            spark, path, queries, k=args.k, nprobe=args.nprobe,
-            probe_strategy="vectorized", rank_strategy="vectorized",
-        )
+        query_ivf_index(spark, path, queries, k=args.k, nprobe=args.nprobe)
         .select("query_id", "neighbor_id")
         .collect()
     )
