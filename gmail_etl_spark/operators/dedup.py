@@ -78,7 +78,13 @@ def shingles(text: Column, k: int = 3) -> Column:
     interpreted, nothing deduplicates it), which makes shingling
     quadratic in document length: at 180k total tokens, 2,000-token
     documents took 6.6 s that way against 0.20 s bound once (4 vCPUs).
-    The shingle strings are byte-identical either way."""
+    The shingle strings are byte-identical either way.
+
+    ``k < 1`` raises ``ValueError``: ``k=0`` would make every document's
+    shingle set ``{""}`` (so every pair scores Jaccard 1.0), and a
+    negative ``k`` fails at action time inside ``slice``."""
+    if k < 1:
+        raise ValueError(f"shingle size k must be >= 1, got {k}")
 
     def body(toks: Column) -> Column:
         n = F.size(toks)
@@ -261,7 +267,12 @@ def capped_pair_candidates(
     ~0.5 s on the 100k-doc bench vs the uncapped r1 expansion, where the
     earlier always-sort form and a filter-split two-aggregation variant
     cost 2.7 s and 1.4 s respectively.)
+
+    ``max_bucket < 2`` raises ``ValueError``: a one-id chunk holds no
+    pair, so every oversized bucket would silently emit nothing.
     """
+    if max_bucket < 2:
+        raise ValueError(f"max_bucket must be >= 2, got {max_bucket}")
     chunks = (
         f"CASE WHEN size(ids) <= {max_bucket} THEN array(ids) "
         f"ELSE transform("
@@ -512,7 +523,6 @@ def minhash_lsh_pairs(
     target_recall: float | None = None,
     max_hashes: int = 256,
     hash_family: str = "xxhash64",
-    checkpoint_sigs: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH + exact verify.
 
@@ -544,15 +554,6 @@ def minhash_lsh_pairs(
     ceiling passes through instead of being silently replaced by the
     library default; ``max_hashes`` is only consulted on this path).
 
-    ``checkpoint_sigs`` (default True) materializes the signature frame
-    once between its two consumers via ``localCheckpoint`` — which makes
-    this builder EAGER (a Spark job runs at plan-build time) and
-    non-fault-tolerant for that intermediate (lineage truncated:
-    executor loss between build and action fails the downstream job
-    instead of recomputing).  Pass ``checkpoint_sigs=False`` for a fully
-    lazy, recompute-on-failure plan at the cost of a second
-    shingle+hash pass over the corpus.
-
     ``hash_family="sha256"`` swaps the signature base hash and the
     verify-set hash for the portable cross-engine family (see
     :func:`_sha_base31`): every value in the pipeline is then exactly
@@ -563,36 +564,35 @@ def minhash_lsh_pairs(
     (~n_keys²/2⁶⁵, and deterministic per corpus), so the oracle replays
     it as tuple equality.
     """
+    _check_threshold(threshold)
     if target_recall is not None:
         n_hashes, bands = lsh_params_for_recall(
             threshold, target_recall, max_hashes=max_hashes
         )
-    sigs = _lsh_sigs(df, id_col, text_col, k, n_hashes, hash_family)
-    if checkpoint_sigs:
-        # The signature frame feeds TWO sub-plans (band buckets and the
-        # verify side), and without a barrier each recomputes the full
-        # shingle+hash pass over the corpus.  localCheckpoint
-        # materializes the narrow (id, sig, hsh) frame once —
-        # shingles are dropped first, they never leave this stage —
-        # measured −1.5 s median on the 100k-doc bench entry
-        # (interleaved A/B, 5/6 rounds faster; guide §5 cache-vs-
-        # recompute rule: the string shingling is the expensive pass).
-        # At cluster scale the materialized frame is ~300 B/doc in
-        # executor memory/disk, replacing a second full text pass;
-        # callers that prefer recompute (CPU-rich, storage-tight) pass
-        # checkpoint_sigs=False.  Note this makes the builder EAGER
-        # (the signature pass runs at plan-build time).
-        #
-        # Fault-tolerance caveat (ADVICE r12): localCheckpoint is
-        # NON-RELIABLE — lineage is truncated, so losing an executor
-        # between build and action fails the downstream job instead of
-        # recomputing, and the checkpointed storage lives until the
-        # executors do (an unpersist handle would be unsafe: releasing
-        # blocks whose lineage is gone breaks every later action on the
-        # returned frame).  On clusters with decommissioning/spot
-        # executors, or when the frame must outlive failures, pass
-        # checkpoint_sigs=False and pay the second corpus pass.
-        sigs = sigs.select("id", "sig", "hsh").localCheckpoint(eager=True)
+    # The signature frame feeds TWO sub-plans (band buckets and the
+    # verify side), and without a barrier each recomputes the full
+    # shingle+hash pass over the corpus.  localCheckpoint materializes
+    # the narrow (id, sig, hsh) frame once — shingles are dropped first,
+    # they never leave this stage — measured −1.5 s median on the
+    # 100k-doc bench entry (interleaved A/B, 5/6 rounds faster; guide §5
+    # cache-vs-recompute rule: the string shingling is the expensive
+    # pass).  At cluster scale the materialized frame is ~300 B/doc in
+    # executor memory/disk, replacing a second full text pass.  This
+    # makes the builder EAGER (the signature pass runs at plan-build
+    # time).
+    #
+    # Fault-tolerance caveat (ADVICE r12): localCheckpoint is
+    # NON-RELIABLE — lineage is truncated, so losing an executor between
+    # build and action fails the downstream job instead of recomputing,
+    # and the checkpointed storage lives until the executors do (an
+    # unpersist handle would be unsafe: releasing blocks whose lineage
+    # is gone breaks every later action on the returned frame).  A
+    # session-level reliable checkpoint mode is ROADMAP direction 6.
+    sigs = (
+        _lsh_sigs(df, id_col, text_col, k, n_hashes, hash_family)
+        .select("id", "sig", "hsh")
+        .localCheckpoint(eager=True)
+    )
     return _pairs_from_sigs(
         sigs, n_hashes, bands, threshold, max_bucket, broadcast_verify
     )
@@ -625,44 +625,72 @@ def _pairs_from_sigs(
     # ONE broadcast replaces two candidate-side shuffles — measured
     # ~1.5 s (25%) on the 100k-doc bench.  Same join keys either way;
     # output is strategy-independent.
-    # Per-side set sizes are materialized BELOW the join (once per doc,
-    # not twice per pair), and the intersection is materialized in ONE
-    # projection whose consumer is the _score_barrier-wrapped jaccard —
-    # so array_intersect runs exactly once per candidate pair (plan-
-    # pinned by tests/test_operators.py; was up to 4× — see
-    # _score_barrier's docstring for the r12 plan evidence and the
-    # 8-core A/B).  jaccard = inter/(a_n+b_n-inter) is the identical
-    # double expression tree as size-based union.
-    sh = sigs.select("id", "hsh", F.size("hsh").alias("n"))
+    sh = sigs.select("id", F.col("hsh").alias("set"))
     sh = F.broadcast(sh) if broadcast_verify else sh.hint("shuffle_hash")
-    candidates = (
-        candidates.join(
-            sh.select(
-                F.col("id").alias("a_id"),
-                F.col("hsh").alias("a_sh"),
-                F.col("n").alias("a_n"),
-            ),
+    return _jaccard_verify(candidates, sh, sh, threshold)
+
+
+def _check_threshold(threshold: float) -> None:
+    """Reject a Jaccard threshold outside [0, 1], NaN included: above 1
+    the prefix filter's slice length goes negative and fails at action
+    time without a name, and NaN compares false against every score, so
+    a verify join would silently return nothing."""
+    if not 0.0 <= threshold <= 1.0:
+        raise ValueError(f"Jaccard threshold must be in [0, 1], got {threshold!r}")
+
+
+def _jaccard(inter: Column, a_n: Column, b_n: Column) -> Column:
+    """Set Jaccard from the intersection size and the two set sizes:
+    ``inter / (a_n + b_n − inter)``, the union by inclusion–exclusion."""
+    return inter.cast("double") / (a_n + b_n - inter).cast("double")
+
+
+def _jaccard_verify(
+    cands: DataFrame, a_side: DataFrame, b_side: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verify join — the one kernel behind the LSH pairs
+    (:func:`_pairs_from_sigs`), the prefix-filter join
+    (:func:`jaccard_pairs_prefix`) and the streaming near-dup index
+    probe.
+
+    ``cands`` holds (a_id, b_id) candidate pairs; ``a_side`` and
+    ``b_side`` are (id, set) frames that already carry the caller's join
+    hint (a hint on a side survives the projections below — Spark
+    resolves join hints through unary nodes).  Returns (a_id, b_id,
+    jaccard) for every candidate scoring at or above ``threshold``.
+
+    Single-intersect discipline: per-side set sizes are computed BELOW
+    the joins (once per doc, not twice per pair), and the intersection
+    is materialized in ONE projection whose consumer is the
+    :func:`_score_barrier`-wrapped score — so ``array_intersect`` runs
+    exactly once per candidate pair and never inside a join condition
+    (plan-pinned by ``test_verify_stage_single_intersect_plan``).
+    Without the barrier the threshold filter is pushed into the join
+    condition, where the intersect is evaluated again with no
+    subexpression elimination; the r12 plan paid up to 4 evaluations
+    per pair (see :func:`_score_barrier` for the plan evidence and the
+    8-core A/B)."""
+    _check_threshold(threshold)
+
+    def side(df: DataFrame, p: str) -> DataFrame:
+        return df.select(
+            F.col("id").alias(f"{p}_id"),
+            F.col("set").alias(f"{p}_set"),
+            F.size("set").alias(f"{p}_n"),
+        )
+
+    with_inter = (
+        cands.join(side(a_side, "a"), "a_id")
+        .join(side(b_side, "b"), "b_id")
+        .select(
             "a_id",
-        )
-        .join(
-            sh.select(
-                F.col("id").alias("b_id"),
-                F.col("hsh").alias("b_sh"),
-                F.col("n").alias("b_n"),
-            ),
             "b_id",
+            "a_n",
+            "b_n",
+            F.size(F.array_intersect("a_set", "b_set")).alias("_inter"),
         )
     )
-    with_inter = candidates.select(
-        "a_id",
-        "b_id",
-        "a_n",
-        "b_n",
-        F.size(F.array_intersect("a_sh", "b_sh")).alias("_inter"),
-    )
-    jaccard = F.col("_inter").cast("double") / (
-        F.col("a_n") + F.col("b_n") - F.col("_inter")
-    ).cast("double")
+    jaccard = _jaccard(F.col("_inter"), F.col("a_n"), F.col("b_n"))
     return with_inter.select(
         "a_id", "b_id", _score_barrier(jaccard).alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
@@ -921,6 +949,15 @@ def near_dedup(
 # ---------------------------------------------------------------------------
 
 
+def _doc_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, token): one row per distinct space-split token of each
+    document — the input of every token-set operator below."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.explode(F.array_distinct(_tokens(F.col(text_col)))).alias("token"),
+    )
+
+
 def jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, threshold: float
 ) -> DataFrame:
@@ -933,10 +970,8 @@ def jaccard_pairs(
     would shuffle them twice for the same token-key distribution).
     Callers bound the input (or pre-filter by LSH) at scale.
     """
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(_tokens(F.col(text_col)))).alias("token"),
-    )
+    _check_threshold(threshold)
+    toks = _doc_tokens(df, id_col, text_col)
     sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n_tok"))
     postings = (
         toks.groupBy("token")
@@ -950,9 +985,7 @@ def jaccard_pairs(
     )
     sa = sizes.select(F.col("id").alias("a_id"), F.col("n_tok").alias("a_n"))
     sb = sizes.select(F.col("id").alias("b_id"), F.col("n_tok").alias("b_n"))
-    jac = F.col("n_common").cast("double") / (
-        F.col("a_n") + F.col("b_n") - F.col("n_common")
-    ).cast("double")
+    jac = _jaccard(F.col("n_common"), F.col("a_n"), F.col("b_n"))
     return (
         common.join(sa, "a_id")
         .join(sb, "b_id")
@@ -989,10 +1022,7 @@ def simhash_signatures_portable(
     :func:`_let`; the 64-way nibble ``transform`` reads the bound hex
     string (inlined into the interpreted lambda it would be recomputed
     per nibble, 64 times per token)."""
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(_tokens(F.col(text_col)))).alias("token"),
-    )
+    toks = _doc_tokens(df, id_col, text_col)
     nibbles = _let(
         F.sha2(F.col("token"), 256),
         lambda hx: F.transform(
@@ -1045,12 +1075,8 @@ def jaccard_pairs_prefix(
     bounded by prefix occupancy); verification joins fixed-width int
     arrays by id.  This is the exact-join engine you run INSIDE LSH
     buckets or after MinHash at 100 TB."""
-    import math
-
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(_tokens(F.col(text_col)))).alias("token"),
-    )
+    _check_threshold(threshold)
+    toks = _doc_tokens(df, id_col, text_col)
     # Global rarity rank over the (unbounded) vocabulary: two-phase
     # distributed row number, never a single-partition sort.
     from gmail_etl_spark.operators.distributed_window import attach_row_number
@@ -1082,40 +1108,5 @@ def jaccard_pairs_prefix(
     # function's exactness contract.  Complete chunk-pair expansion
     # keeps every pair at bounded (max_bucket²) per-task cost.
     candidates = capped_pair_candidates(buckets, max_bucket=1024, complete=True)
-    # same single-intersect verify discipline as _pairs_from_sigs: per-
-    # side sizes below the join, intersection materialized once, score
-    # wrapped in _score_barrier so the threshold filter cannot clone the
-    # intersect into the join condition
-    side = per_doc.select("id", "ranks", F.size("ranks").alias("n")).hint(
-        "shuffle_hash"
-    )
-    joined = (
-        candidates.join(
-            side.select(
-                F.col("id").alias("a_id"),
-                F.col("ranks").alias("a_r"),
-                F.col("n").alias("a_n"),
-            ),
-            "a_id",
-        ).join(
-            side.select(
-                F.col("id").alias("b_id"),
-                F.col("ranks").alias("b_r"),
-                F.col("n").alias("b_n"),
-            ),
-            "b_id",
-        )
-    )
-    with_inter = joined.select(
-        "a_id",
-        "b_id",
-        "a_n",
-        "b_n",
-        F.size(F.array_intersect("a_r", "b_r")).alias("_inter"),
-    )
-    jac = F.col("_inter").cast("double") / (
-        F.col("a_n") + F.col("b_n") - F.col("_inter")
-    ).cast("double")
-    return with_inter.select(
-        "a_id", "b_id", _score_barrier(jac).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+    side = per_doc.select("id", F.col("ranks").alias("set")).hint("shuffle_hash")
+    return _jaccard_verify(candidates, side, side, threshold)

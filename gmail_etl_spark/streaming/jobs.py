@@ -20,10 +20,9 @@ from __future__ import annotations
 import json
 import itertools
 import logging
-import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmail_etl_spark.pipeline import transform_stage1
@@ -843,13 +842,26 @@ def _live_of(
 
 #: Sub-tables of one published index dir (sharded for probe pruning):
 #: ``buckets/`` holds narrow (bucket, id) rows directory-partitioned by
-#: ``shard = pmod(bucket, n_shards)`` and sorted by bucket within files;
+#: ``shard`` (:func:`_bucket_shard`) and sorted by bucket within files;
 #: ``hsh/`` holds the per-survivor shingle-hash sets keyed by id,
-#: partitioned by ``idshard = pmod(xxhash64(id), n_shards)``.  The
-#: probe reads ONLY the shards its batch keys fall in, and touches the
-#: (wide) hsh arrays only for verified candidates.
+#: partitioned by ``idshard`` (:func:`_id_shard`).  The probe reads ONLY
+#: the shards its batch keys fall in, and touches the (wide) hsh arrays
+#: only for verified candidates.
 _IDX_BUCKETS = "buckets"
 _IDX_HSH = "hsh"
+
+
+def _bucket_shard(n_shards: int) -> Column:
+    """``buckets/`` shard of a row with a ``bucket`` column — the one
+    rule the writer partitions by and the probe prunes by (a writer and
+    a probe that disagreed would silently miss shards)."""
+    return F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
+
+
+def _id_shard(n_shards: int) -> Column:
+    """``hsh/`` shard of a row with an ``id`` column (see
+    :func:`_bucket_shard`)."""
+    return F.pmod(F.xxhash64(F.col("id")), F.lit(n_shards)).cast("int")
 
 
 def _read_index_meta(spark: SparkSession, index_dir: str) -> dict | None:
@@ -991,20 +1003,18 @@ def _write_index_tables(
     """Write the two sharded sub-tables of one index version dir and
     mark it ``_COMMITTED`` (shared by append publishes and tiered
     folds — a fold dir is byte-layout-identical to a batch dir)."""
-    shard = F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
     (
         buckets_out.select("bucket", "id")
-        .withColumn("shard", shard)
+        .withColumn("shard", _bucket_shard(n_shards))
         .repartition("shard")
         .sortWithinPartitions("shard", "bucket")
         .write.mode("overwrite")
         .partitionBy("shard")
         .parquet(f"{new_dir}/{_IDX_BUCKETS}")
     )
-    idshard = F.pmod(F.xxhash64(F.col("id")), F.lit(n_shards)).cast("int")
     (
         hsh_out.select("id", "hsh")
-        .withColumn("idshard", idshard)
+        .withColumn("idshard", _id_shard(n_shards))
         .repartition("idshard")
         .sortWithinPartitions("idshard")
         .write.mode("overwrite")
@@ -1202,11 +1212,9 @@ _log = logging.getLogger(__name__)
 #: |index-bucket| × |batch-in-bucket| candidate rows; the expansion is
 #: the documented recall contract, but a runaway bucket should be
 #: VISIBLE, not silent — past this many candidates the probe logs a
-#: warning naming the knob.  Env-tunable; checked only on the persisted
-#: pruned path, where the count is a cheap cache scan.
-_UNCAPPED_CAND_WARN = int(
-    os.environ.get("SPARK_GRAFT_UNCAPPED_CAND_WARN", "5000000")
-)
+#: warning naming the knob.  Checked only on the persisted pruned path,
+#: where the count is a cheap cache scan.
+_UNCAPPED_CAND_WARN = 5_000_000
 
 
 def _probe_dup_ids(
@@ -1217,7 +1225,7 @@ def _probe_dup_ids(
     threshold: float,
     max_bucket: int | None,
     n_shards: int,
-    pins: list | None = None,
+    pins: list,
     stats: dict | None = None,
 ) -> DataFrame:
     """Batch ids that near-duplicate a retained doc — the pruned history
@@ -1247,19 +1255,25 @@ def _probe_dup_ids(
     ``max_bucket=None`` disables step 2 (no cap, no recall sacrifice —
     the read-only decontamination default); past
     :data:`_UNCAPPED_CAND_WARN` candidates the uncapped expansion logs
-    a warning so a runaway boilerplate bucket is visible.  When
-    ``pins`` is given, frames persisted to stop the candidate stage
-    executing twice (once for the shard collect, once at action time)
-    are appended to it; the CALLER unpersists them after consuming the
-    result.  ``stats`` (when a dict) receives probe-plan accounting —
-    ``prune`` (bool), ``probe_shards`` / ``cand_shards`` (the pruned
-    partition sets, None when unpruned), ``bytes_buckets`` /
-    ``bytes_hsh`` (on-disk bytes one scan of the matched shards reads,
-    measured at probe time because folds may later delete the dirs),
-    ``n_candidates`` (persisted path only) — for the scale-evidence
+    a warning so a runaway boilerplate bucket is visible; a
+    ``max_bucket`` below 1 raises ``ValueError`` (it would drop every
+    matched bucket, so nothing would ever be flagged).  Frames persisted
+    to stop the candidate stage executing twice (once for the shard
+    collect, once at action time) are appended to ``pins``; the CALLER
+    unpersists them after consuming the result.  ``stats`` (when a
+    dict) receives probe-plan accounting — ``prune`` (bool),
+    ``probe_shards`` / ``cand_shards`` (the pruned partition sets, None
+    when unpruned), ``bytes_buckets`` / ``bytes_hsh`` (on-disk bytes one
+    scan of the matched shards reads, measured at probe time because
+    folds may later delete the dirs), ``n_candidates`` (pruned path
+    only) — for the scale-evidence
     harnesses; zero hot-path cost when None beyond what the plan
     already executed.
     """
+    from gmail_etl_spark.operators.dedup import _jaccard_verify
+
+    if max_bucket is not None and max_bucket < 1:
+        raise ValueError(f"max_bucket must be >= 1 or None, got {max_bucket}")
     hist_buckets = _read_index_sub(spark, hist_dirs, _IDX_BUCKETS)
     if hist_buckets is None:
         return b_hsh.select("id").limit(0)
@@ -1272,9 +1286,9 @@ def _probe_dup_ids(
         stats["probe_shards"] = stats["cand_shards"] = None
         stats["bytes_buckets"] = stats["bytes_hsh"] = 0
     if prune:
-        shard = F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
         probe_shards = sorted(
-            r[0] for r in bkeys.select(shard.alias("shard")).distinct().collect()
+            r[0]
+            for r in bkeys.select(_bucket_shard(n_shards)).distinct().collect()
         )
         if stats is not None:
             stats["probe_shards"] = probe_shards
@@ -1307,28 +1321,28 @@ def _probe_dup_ids(
             .select("bucket")
         )
         hb = hb.join(F.broadcast(over), "bucket", "left_anti")
+    # (a_id, b_id) = (index id, batch id)
     cand = (
         hb.join(
             F.broadcast(bkeys.select(F.col("id").alias("b_id"), "bucket")),
             "bucket",
         )
-        .select("b_id", F.col("id").alias("h_id"))
+        .select(F.col("id").alias("a_id"), "b_id")
         .distinct()
     )
-    if prune and pins is not None:
+    if prune:
         # the cand_shards collect below EXECUTES this whole candidate
         # plan (index scan + cap + expansion); without a persist the
         # returned plan re-executes it at action time — pay it once
         cand = cand.persist()
         pins.append(cand)
-    h_ids = cand.select(F.col("h_id").alias("id")).distinct()
+    h_ids = cand.select(F.col("a_id").alias("id")).distinct()
     hist_hsh = _read_index_sub(spark, hist_dirs, _IDX_HSH)
     if hist_hsh is None:
         return b_hsh.select("id").limit(0)
     if prune:
-        idshard = F.pmod(F.xxhash64(F.col("id")), F.lit(n_shards)).cast("int")
         cand_shards = sorted(
-            r[0] for r in h_ids.select(idshard.alias("s")).distinct().collect()
+            r[0] for r in h_ids.select(_id_shard(n_shards)).distinct().collect()
         )
         if stats is not None:
             stats["cand_shards"] = cand_shards
@@ -1340,7 +1354,7 @@ def _probe_dup_ids(
                     for s in cand_shards
                 ],
             )
-        if (max_bucket is None or stats is not None) and pins:
+        if max_bucket is None or stats is not None:
             # cheap on the just-persisted frame; makes a runaway
             # uncapped expansion visible (ADVICE r11) and feeds the
             # harness accounting
@@ -1365,43 +1379,12 @@ def _probe_dup_ids(
             stats["bytes_hsh"] = _bytes_under(
                 spark, [f"{d.rstrip('/')}/{_IDX_HSH}" for d in hist_dirs]
             )
-    # single-intersect verify (r13, the _pairs_from_sigs discipline):
-    # per-side set sizes below the joins, intersection materialized once
-    # behind _score_barrier — without the barrier the threshold filter
-    # is pushed into the join condition, where array_intersect evaluates
-    # twice per candidate (no subexpression elimination there)
-    from gmail_etl_spark.operators.dedup import _score_barrier
-
-    h_hsh = hh.join(F.broadcast(h_ids), "id").select(
-        F.col("id").alias("h_id"),
-        F.col("hsh").alias("h_hsh"),
-        F.size("hsh").alias("h_n"),
+    h_side = hh.join(F.broadcast(h_ids), "id").select(
+        "id", F.col("hsh").alias("set")
     )
-    with_inter = (
-        cand.join(h_hsh, "h_id")
-        .join(
-            F.broadcast(
-                b_hsh.select(
-                    F.col("id").alias("b_id"),
-                    F.col("hsh").alias("b_hsh"),
-                    F.size("hsh").alias("b_n"),
-                )
-            ),
-            "b_id",
-        )
-        .select(
-            "b_id",
-            "b_n",
-            "h_n",
-            F.size(F.array_intersect("b_hsh", "h_hsh")).alias("_inter"),
-        )
-    )
-    jac = F.col("_inter").cast("double") / (
-        F.col("b_n") + F.col("h_n") - F.col("_inter")
-    ).cast("double")
+    b_side = F.broadcast(b_hsh.select("id", F.col("hsh").alias("set")))
     return (
-        with_inter.select("b_id", _score_barrier(jac).alias("_j"))
-        .filter(F.col("_j") >= threshold)
+        _jaccard_verify(cand, h_side, b_side, threshold)
         .select(F.col("b_id").alias("id"))
         .distinct()
     )
@@ -1511,12 +1494,14 @@ def maintain_near_dup_index(
     from gmail_etl_spark.operators.dedup import (
         _banded_keys,
         _check_hash_family,
+        _check_threshold,
         _lsh_sigs,
         _pairs_from_sigs,
         near_dedup,
     )
 
     _check_hash_family(hash_family)
+    _check_threshold(threshold)
     if int(compact_every) == 1:
         raise ValueError(
             "compact_every=1 is not a valid fold fanout (a single-dir fold "
@@ -1711,9 +1696,11 @@ def probe_near_dup_index(
     from gmail_etl_spark.operators.dedup import (
         _banded_keys,
         _check_hash_family,
+        _check_threshold,
         _lsh_sigs,
     )
 
+    _check_threshold(threshold)
     if hash_family is not None:
         _check_hash_family(hash_family)
     meta, dirs = _published_index(spark, index_dir)

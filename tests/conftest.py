@@ -9,6 +9,13 @@ from gmail_etl_spark.plans.catalog import TABLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+#: The near-dup index ``_META`` that maintain_near_dup_index writes at its
+#: default shape — for tests that hand-build an index.
+LAYOUT3_META = {
+    "layout": 3, "n_shards": 16, "k": 3, "n_hashes": 16, "bands": 8,
+    "hash_family": "xxhash64",
+}
+
 
 @pytest.fixture(scope="session")
 def spark():

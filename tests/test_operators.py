@@ -136,9 +136,18 @@ def test_capped_pair_expansion_at_max_bucket_boundaries(spark):
     (size ≤ B) must emit the FULL clique (the CASE's cheap arm must not
     drop pairs); oversized buckets may thin the clique but must (a)
     emit only valid canonical pairs from the id set, and (b) keep the
-    clique one connected component via cross-band chunk overlap."""
+    clique one connected component via cross-band chunk overlap.  A cap
+    below 2 raises in both modes (1 silently emitted no pair, 0 and
+    negatives failed at action time without a name)."""
     from gmail_etl_spark.operators.dedup import capped_pair_candidates
 
+    one = spark.createDataFrame(
+        [(0, 7, [0, 1, 2])], "band int, bucket long, ids array<bigint>"
+    )
+    for bad in (1, 0, -3):
+        for complete in (False, True):
+            with pytest.raises(ValueError, match="max_bucket must be >= 2"):
+                capped_pair_candidates(one, bad, complete=complete)
     cap, bands = 8, 3
     for size in (2, cap - 1, cap, cap + 1, 2 * cap, 2 * cap + 1, 3 * cap + 5):
         buckets = spark.range(bands).select(
@@ -982,8 +991,11 @@ def test_shingles_split_once_and_reference(spark):
     lambda it re-splits the document once per shingle, since lambdas
     get no common-subexpression elimination).  Values equal a
     pure-Python reference for k = 1..4 on null, empty, short, repeated-
-    token and consecutive-space (empty-token) inputs."""
+    token and consecutive-space (empty-token) inputs.  ``k < 1`` raises
+    at build time, in ``shingles`` and in the decontamination report
+    built on it."""
     from gmail_etl_spark.operators.dedup import shingles
+    from gmail_etl_spark.operators.sampling import contamination_report
 
     texts = [None, "", "a", "a b", "a b c d e", "x x x x x",
              "a  b   c", " lead trail ", "p q p q p q"]
@@ -1010,7 +1022,15 @@ def test_shingles_split_once_and_reference(spark):
                 out.append(sh)
         return out
 
-    for k in (1, 2, 3, 4):
+    for k in (-1, 0, 1, 2, 3, 4):
+        if k < 1:
+            # k=0 made every shingle set {""} (every pair Jaccard 1.0)
+            with pytest.raises(ValueError, match="k must be >= 1"):
+                shingles(F.col("t"), k)
+            docs = df.select(F.lit(1).alias("id"), "t")
+            with pytest.raises(ValueError, match="k must be >= 1"):
+                contamination_report(docs, docs, "id", "t", k=k)
+            continue
         got = [r["s"] for r in df.select(shingles(F.col("t"), k).alias("s")).collect()]
         assert got == [ref(t, k) for t in texts], k
 
@@ -2229,30 +2249,91 @@ def test_minhash_verify_strategy_independence(spark):
     assert out[False] == out[True] and len(out[True]) > 0
 
 
-def test_verify_stage_single_intersect_plan(spark):
+def test_verify_stage_single_intersect_plan(spark, tmp_path):
     """Mechanism lock for the r13 single-intersect verify: the optimized
-    plan of both Jaccard verify joins must evaluate ``array_intersect``
+    plan of every user of the Jaccard verify kernel (LSH pairs, prefix
+    join, streaming index probe) must evaluate ``array_intersect``
     exactly ONCE, and never inside a join condition.  Without the
     _score_barrier the threshold filter is pushed into the join
     condition and the non-cheap intersect is cloned — the committed r12
     plan paid up to 4 evaluations per verified pair (see
     plans/r12/near_dedup_pairs_subplan_after.txt:140-143 and
     OPTIMIZATION_r13.md section 1 for the 8-core A/B: med 0.871 -> 0.541 s)."""
-    from gmail_etl_spark.operators.dedup import jaccard_pairs_prefix
+    from pyspark.sql import Row
+
+    import gmail_etl_spark.streaming.jobs as J
+    from gmail_etl_spark.operators.dedup import (
+        _lsh_sigs,
+        _pairs_from_sigs,
+        jaccard_pairs_prefix,
+    )
+    from tests.conftest import LAYOUT3_META
 
     d = _docs(spark, 80).select("doc_id", "text")
+    # the streaming probe on a hand-built one-dir index (unpruned, so no
+    # frame is pinned and the whole probe sits in one plan)
+    index = str(tmp_path / "handindex")
+    J._write_index_meta(spark, index, LAYOUT3_META)
+    J._publish_index_batch(
+        spark, index,
+        spark.createDataFrame([Row(bucket=12, id=9000)]),
+        spark.createDataFrame([Row(id=9000, hsh=[1, 2, 3, 4])]),
+        0, n_shards=16,
+    )
+    pins: list = []
+    probe = J._probe_dup_ids(
+        spark, J._published_index(spark, index)[1],
+        spark.createDataFrame([Row(id=2, bucket=12)]),
+        spark.createDataFrame([Row(id=2, hsh=[1, 2, 3])]),
+        0.5, None, 16, pins,
+    )
+    assert not pins
     for df in (
-        # checkpoint_sigs=False keeps the builder lazy — this test reads
-        # the plan, it never executes the corpus pass
-        minhash_lsh_pairs(
-            d, "doc_id", "text", threshold=0.3, checkpoint_sigs=False
-        ),
+        # _pairs_from_sigs over the lazy signature frame: the plan is
+        # read, the corpus pass never executes
+        _pairs_from_sigs(_lsh_sigs(d, "doc_id", "text", 3, 32), 32, 8, 0.3, 512),
         jaccard_pairs_prefix(d, "doc_id", "text", 0.5),
+        probe,
     ):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert plan.count("array_intersect") == 1, plan
         join_lines = [l for l in plan.splitlines() if "Join" in l]
         assert join_lines and not any("array_intersect" in l for l in join_lines), plan
+    assert {r["id"] for r in probe.collect()} == {2}  # 3/4 >= 0.5
+
+
+def test_jaccard_threshold_domain(spark, tmp_path):
+    """A Jaccard threshold outside [0, 1], or NaN, raises ValueError at
+    build time in every verify path — and in the streaming index
+    entry points before any stream starts.  Before the check, 1.5
+    failed at action time without a name and NaN silently matched
+    nothing."""
+    from gmail_etl_spark.operators.dedup import jaccard_pairs_prefix
+    from gmail_etl_spark.streaming.jobs import (
+        maintain_near_dup_index,
+        probe_near_dup_index,
+    )
+
+    d = _docs(spark, 20).select("doc_id", "text")
+    for bad in (1.5, -0.1, float("nan")):
+        for build in (
+            lambda t: jaccard_pairs(d, "doc_id", "text", t),
+            lambda t: jaccard_pairs_prefix(d, "doc_id", "text", t),
+            lambda t: minhash_lsh_pairs(d, "doc_id", "text", threshold=t),
+            lambda t: maintain_near_dup_index(
+                spark, str(tmp_path / "docs"), str(tmp_path / "idx"),
+                str(tmp_path / "ckpt"), threshold=t,
+            ),
+            lambda t: probe_near_dup_index(
+                spark, str(tmp_path / "idx"), d, threshold=t
+            ),
+        ):
+            with pytest.raises(ValueError, match="threshold must be in"):
+                build(bad)
+    assert not (tmp_path / "idx").exists()
+    # the domain edges are valid
+    for ok in (0.0, 1.0):
+        jaccard_pairs_prefix(d, "doc_id", "text", ok)
 
 
 def test_score_barrier_is_value_identity(spark):

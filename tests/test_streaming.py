@@ -17,7 +17,7 @@ from gmail_etl_spark.streaming.jobs import (
     stream_raw_to_stage1,
     windowed_event_counts,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import LAYOUT3_META, SF_DIR
 
 
 def test_stream_exactly_once_and_archive(spark, tmp_path):
@@ -1305,13 +1305,6 @@ def test_near_dup_index_stray_dirs_and_marker_fallback(spark, tmp_path):
     assert {r["id"] for r in read_near_dup_index(spark, str(index)).collect()} == expected
 
 
-#: The ``_META`` that maintain_near_dup_index writes at its default shape.
-_LAYOUT3_META = {
-    "layout": 3, "n_shards": 16, "k": 3, "n_hashes": 16, "bands": 8,
-    "hash_family": "xxhash64",
-}
-
-
 def test_probe_dup_ids_hot_bucket_cap_and_prune_equality(spark, tmp_path):
     """Probe-side hot-bucket cap: an index bucket with more than
     ``max_bucket`` members is dropped before candidate expansion (the
@@ -1332,7 +1325,7 @@ def test_probe_dup_ids_hot_bucket_cap_and_prune_equality(spark, tmp_path):
         + [Row(id=9000, hsh=[1, 2, 3, 4])]
     )
     index = str(tmp_path / "handindex")
-    J._write_index_meta(spark, index, _LAYOUT3_META)
+    J._write_index_meta(spark, index, LAYOUT3_META)
     J._publish_index_batch(spark, index, buckets_df, hsh_df, 0, n_shards=16)
     dirs = J._published_index(spark, index)[1]
     assert len(dirs) == 1
@@ -1346,13 +1339,22 @@ def test_probe_dup_ids_hot_bucket_cap_and_prune_equality(spark, tmp_path):
     )
 
     def dup_set(max_bucket):
-        return {
-            r["id"]
-            for r in J._probe_dup_ids(
-                spark, dirs, bkeys, b_hsh, 0.5, max_bucket, 16
-            ).collect()
-        }
+        pins: list = []
+        try:
+            return {
+                r["id"]
+                for r in J._probe_dup_ids(
+                    spark, dirs, bkeys, b_hsh, 0.5, max_bucket, 16, pins
+                ).collect()
+            }
+        finally:
+            for frame in pins:
+                frame.unpersist()
 
+    # a cap below 1 would drop every matched bucket: nothing is ever a dup
+    for bad in (0, -3):
+        with pytest.raises(ValueError, match="max_bucket"):
+            dup_set(bad)
     assert dup_set(1000) == {1, 2}  # uncapped: both collisions verify
     # capped at 512: the 600-member bucket is dropped -> doc 1's only
     # collision vanishes (documented recall sacrifice); doc 2 unaffected
@@ -1390,7 +1392,7 @@ def test_probe_dup_ids_stats_and_uncapped_warning(
         + [Row(id=9000, hsh=[1, 2, 3, 4])]
     )
     index = str(tmp_path / "handindex")
-    J._write_index_meta(spark, index, _LAYOUT3_META)
+    J._write_index_meta(spark, index, LAYOUT3_META)
     J._publish_index_batch(spark, index, buckets_df, hsh_df, 0, n_shards=16)
     dirs = J._published_index(spark, index)[1]
 

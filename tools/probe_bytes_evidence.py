@@ -141,7 +141,7 @@ def main() -> None:
     v2_ids = sorted(
         r["id"]
         for r in J._probe_dup_ids(
-            spark, dirs, bkeys, b_hsh, 0.5, None, args.n_shards, pins=pins
+            spark, dirs, bkeys, b_hsh, 0.5, None, args.n_shards, pins
         ).collect()
     )
     v2_wall = round(time.perf_counter() - t0, 2)
@@ -197,9 +197,9 @@ def main() -> None:
         .select("id")
         .distinct()
     )
-    idshard = F.pmod(F.xxhash64(F.col("id")), F.lit(args.n_shards)).cast("int")
     cand_shards = sorted(
-        r[0] for r in cand_ids.select(idshard.alias("s")).distinct().collect()
+        r[0]
+        for r in cand_ids.select(J._id_shard(args.n_shards)).distinct().collect()
     )
     hsh_fetched_files = [
         f for f in hsh_files

@@ -131,24 +131,27 @@ def main() -> None:
     assert uncapped == hot_n * batch_n + 10, uncapped
     assert capped == 10, capped
 
+    def probe(max_bucket: int) -> list[int]:
+        pins: list = []
+        try:
+            return sorted(
+                r["id"]
+                for r in J._probe_dup_ids(
+                    spark, dirs, bkeys, b_hsh, 0.5, max_bucket, args.n_shards, pins
+                ).collect()
+            )
+        finally:
+            for frame in pins:
+                frame.unpersist()
+
     t0 = time.perf_counter()
-    got = sorted(
-        r["id"]
-        for r in J._probe_dup_ids(
-            spark, dirs, bkeys, b_hsh, 0.5, args.max_bucket, args.n_shards
-        ).collect()
-    )
+    got = probe(args.max_bucket)
     wall_capped = round(time.perf_counter() - t0, 2)
     expect_capped = [10_000_000 + i for i in range(10)]
     assert got == expect_capped, (got[:12], len(got))
 
     t0 = time.perf_counter()
-    got_uncapped = sorted(
-        r["id"]
-        for r in J._probe_dup_ids(
-            spark, dirs, bkeys, b_hsh, 0.5, 10**9, args.n_shards
-        ).collect()
-    )
+    got_uncapped = probe(10**9)
     wall_uncapped = round(time.perf_counter() - t0, 2)
     expect_uncapped = expect_capped + [10_000_000 + batch_n - 1]
     assert got_uncapped == expect_uncapped, (got_uncapped[:12], len(got_uncapped))

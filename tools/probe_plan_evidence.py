@@ -35,16 +35,25 @@ import tempfile
 import time
 
 
-def _walk_scans(node, out: list) -> None:
+def _walk_scans(node, out: list, seen: set) -> None:
     cname = node.getClass().getSimpleName()
     if cname == "AdaptiveSparkPlanExec":
-        _walk_scans(node.executedPlan(), out)
+        _walk_scans(node.executedPlan(), out, seen)
+        return
+    if cname == "InMemoryTableScanExec":
+        # the probe persists its candidate frame: the index scans run
+        # inside the cached plan, which every reader of the frame shares
+        cached = node.relation().cachedPlan()
+        key = cached.getClass().getName() + "@" + str(cached.hashCode())
+        if key not in seen:
+            seen.add(key)
+            _walk_scans(cached, out, seen)
         return
     if cname == "FileSourceScanExec":
         out.append(node)
     children = node.children()
     for i in range(children.size()):
-        _walk_scans(children.apply(i), out)
+        _walk_scans(children.apply(i), out, seen)
 
 
 def scan_evidence(df) -> list[dict]:
@@ -52,7 +61,7 @@ def scan_evidence(df) -> list[dict]:
     scan in ``df``'s EXECUTED plan."""
     qe = df._jdf.queryExecution()
     scans: list = []
-    _walk_scans(qe.executedPlan(), scans)
+    _walk_scans(qe.executedPlan(), scans, set())
     out = []
     for s in scans:
         meta = s.metadata()
@@ -136,17 +145,20 @@ def main() -> None:
     # in the returned plan: read the plan of the pruned probe it wraps
     sigs = _lsh_sigs(probe_docs, "doc_id", "text", 3, 16, "xxhash64")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    pins: list = []
     try:
         t0 = time.perf_counter()
         probed = J._probe_dup_ids(
             spark, dirs, _banded_keys(sigs, 16, bands), sigs.select("id", "hsh"),
-            0.5, None, args.n_shards,
+            0.5, None, args.n_shards, pins,
         )
         dup_ids = sorted(r["id"] for r in probed.collect())
         wall = round(time.perf_counter() - t0, 2)
         scans = scan_evidence(probed)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+        for frame in pins:
+            frame.unpersist()
 
     # unpruned cross-check: force the gate off; answers must be equal
     saved = J._PRUNE_MIN_FILES
